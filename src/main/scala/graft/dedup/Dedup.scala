@@ -77,8 +77,13 @@ object Dedup {
     // injective relabeling of shingles preserves df counts and PPJoin's
     // prefix theorem, and the candidate set stays a superset of the true
     // pairs. Verification below still intersects the exact STRING arrays,
-    // so the verified output is identical for any hash (a 2^-64 collision
-    // could only add/remove a candidate, never change a verified pair).
+    // so a hash collision can never produce a false pair. It CAN lose a
+    // true one while the MaxShingleDf cap is active: a 64-bit collision
+    // merges two shingles' df counts, the merged count can push both over
+    // the cap, and the cut then drops them from every prefix — including a
+    // true pair's only shared prefix shingle. At sizes where the cap binds
+    // (many billions of distinct shingles) such collisions are expected,
+    // not rare; below the cap a collision only adds a candidate.
     val postings = docs
       .select(col("doc_id"), col("sz"), explode(col("shingles")).as("sh"))
       .select(col("doc_id"), col("sz"),

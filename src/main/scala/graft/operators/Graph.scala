@@ -100,9 +100,16 @@ object Graph {
     * `round` applies — GraphSpec pins local ≡ distributed row-for-row.
     * Above the ceiling (web scale) the distributed loop runs unchanged.
     */
-  private[graft] def localMaxEdges(s: SparkSession): Long =
-    s.conf.getOption("graft.graph.localMaxEdges")
+  private[graft] def localMaxEdges(s: SparkSession): Long = {
+    val cap = s.conf.getOption("graft.graph.localMaxEdges")
       .map(_.toLong).getOrElse(1000000L)
+    // pageRank collects at most cap+1 edges through an Int limit: at
+    // Int.MaxValue or above the take would truncate the edge list and still
+    // pass the fits-under-cap test, ranking a partial graph
+    require(cap < Int.MaxValue,
+      s"graft.graph.localMaxEdges must be below ${Int.MaxValue}, got $cap")
+    cap
+  }
 
   /** Driver-local replica of the distributed rank loop's arithmetic —
     * shared by [[pageRank]]'s small-graph path. */
@@ -150,7 +157,7 @@ object Graph {
     // distributed loop runs unchanged
     val cap = localMaxEdges(s)
     val e = raw.select(col("src"), col("dst")).as[(Long, Long)]
-      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      .limit((cap + 1).toInt).collect()
     if (e.length <= cap) return pageRankLocal(e).toSeq.toDF("node", "pr")
     pageRankDistributed(s, raw)
   }

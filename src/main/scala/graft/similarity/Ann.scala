@@ -1702,38 +1702,17 @@ object Ann {
     * by the mod-32 refinement of the mod-8 residue (3, 11, 19, 27 — all
     * ≡ 3 mod 8, power-of-two moduli so signed pmod == unsigned %), with
     * staggered mtimes so the file source's batch order is pinned. */
-  private val ingestFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private[graft] val IngestResidues: Seq[Long] = Seq(3L, 11L, 19L, 27L)
 
-  private def ingestFixtureDir(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(ingestFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_annstream_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val t0 = System.currentTimeMillis()
-      IngestResidues.zipWithIndex.foreach { case (res, j) =>
-        val batch = Tables.embeddings(s, d)
+  private def ingestFixtureDir(s: SparkSession, d: String): String =
+    graft.streaming.Streams.fixtureDir(s, d, "embeddings.parquet", "annstream") {
+      IngestResidues.zipWithIndex.map { case (res, j) =>
+        s"arr$j" -> Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"))
           .filter(pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
             lit(32L)) === lit(res))
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_arr$j")
-        batch.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"arr$j.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, t0 - (IngestResidues.length - j) * 60000L, -1); ()
       }
-      dir.toString
     }
-  }
 
   private val ingestBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
@@ -1762,12 +1741,11 @@ object Ann {
     * spec can re-run it against a doctored checkpoint. */
   private[graft] def runIngestStream(s: SparkSession, d: String,
       dir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val fix = ingestFixtureDir(s, d)
     val (cb, ci2) = readPqCodebookArrays(s, s"${pqIncrDir(s, d)}/codebook")
     val cents = s.read.parquet(s"${ivfIncrDir(s, d)}/centroids").collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
-    val q = s.readStream
+    graft.streaming.Streams.run(s, s.readStream
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$fix/*.parquet")
@@ -1785,9 +1763,8 @@ object Ann {
         enc.join(routed, "vec_id")
           .write.mode("overwrite").parquet(s"$dir/gen-s$id/postings"); ()
       }
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
+      .option("checkpointLocation", s"$dir/ckpt"))
+    ()
   }
 
   private[graft] def ingestDirForSpec(s: SparkSession, d: String): String =

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQueryProgress, Trigger}
 import graft.operators.Exact._
 
 /** C-block streaming (SURVEY §2 C3/C4): the same event computations as the
@@ -240,29 +241,15 @@ object Streams {
   }
 
   def streamingTypeTransitions(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_trans_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"))
       .as[TEv]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsTransitions,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, "trans", src.groupByKey(_.user_id)
+      .transformWithState(new TwsTransitions,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append()),
+      "append", stateParts(s), RocksDbProvider)
   }
 
   /** C34 — BATCH-BOOTSTRAP of streaming state via
@@ -317,7 +304,6 @@ object Streams {
     import graft.operators.Tables
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val name = "graft_stream_boot_sink_" + sinkId.incrementAndGet()
     // batch side: the old era's final OPEN session per user (ms-grain cut,
     // so both engines and the stream filter agree exactly)
     val evb = Tables.events(s, d)
@@ -347,24 +333,11 @@ object Streams {
       .filter(col("ts") > lit(cut2))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsBootSession,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append(),
-          openState)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, "boot", src.groupByKey(_.user_id)
+      .transformWithState(new TwsBootSession,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append(),
+        openState),
+      "append", stateParts(s), RocksDbProvider)
   }
 
   /** C33 — BURST detection via transformWithState LIST state (round-13;
@@ -412,50 +385,129 @@ object Streams {
   }
 
   def streamingBurstDetect(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_burst_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .as[PEv]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsBurst,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, "burst", src.groupByKey(_.user_id)
+      .transformWithState(new TwsBurst,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append()),
+      "append", stateParts(s), RocksDbProvider)
   }
 
   /** Era fixture for C32 (the C25/C28 modTime-ordered discipline): old-era
     * events, an empty bridge (fires the mid-stream timer pass at the
     * post-batch0 watermark), then the new era. */
-  private val twsFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def twsFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(twsFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_twst_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
+  private def twsFixtureDir(s: SparkSession, d: String): String =
+    fixtureDir(s, d, "events.parquet", "twst") {
+      val ev = graft.operators.Tables.events(s, d).select(col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
       val cut2 = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
+      Seq("batch0_oldera" -> ev.filter(col("ts") <= lit(cut2)),
+        "batch1_bridge" -> ev.filter(lit(false)),
+        "batch2_newera" -> ev.filter(col("ts") > lit(cut2)))
+    }
+
+  def streamingSessionTimers(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val src = s.readStream
+      .schema("user_id BIGINT, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"${twsFixtureDir(s, d)}/*.parquet")
+      .withWatermark("ts", "1 hour")
+      .as[Ev2]
+    drain(s, "twst", src.groupByKey(_.user_id)
+      .transformWithState(new TwsTimedSession,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append()),
+      "append", stateParts(s), RocksDbProvider)
+  }
+
+  private val sinkId = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Run one streaming query to completion: set `confs`, start `writer`
+    * with an AvailableNow trigger and process everything available. The
+    * query is stopped and each conf restored to its old value (unset if it
+    * had none) also when the query fails, so a failing stream leaves no
+    * active query and no changed session conf behind. Returns the query's
+    * per-batch progress.
+    */
+  private[graft] def run(s: SparkSession, writer: DataStreamWriter[_],
+      confs: (String, String)*): Seq[StreamingQueryProgress] = {
+    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
+    } finally saved.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** [[run]] over a memory sink named `graft_stream_<tag>_sink_<n>`: the
+    * drained rows as a resolved frame, plus the query's progress. The
+    * sink's temp view is dropped before returning; the frame keeps the
+    * sink, so its rows live exactly as long as the caller holds the frame
+    * and nothing builds up in a long-lived session.
+    */
+  private def drainWithProgress(s: SparkSession, tag: String, ds: Dataset[_],
+      mode: String, confs: (String, String)*): (DataFrame, Seq[StreamingQueryProgress]) = {
+    val name = s"graft_stream_${tag}_sink_${sinkId.incrementAndGet()}"
+    try {
+      val progress =
+        run(s, ds.writeStream.format("memory").queryName(name).outputMode(mode), confs: _*)
+      (s.table(name), progress)
+    } finally s.catalog.dropTempView(name)
+  }
+
+  private[graft] def drain(s: SparkSession, tag: String, ds: Dataset[_], mode: String,
+      confs: (String, String)*): DataFrame =
+    drainWithProgress(s, tag, ds, mode, confs: _*)._1
+
+  /** The state store every transformWithState drain runs on (the
+    * operator rejects the default HDFS-backed store). */
+  private val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Stateful-operator partition count for the gated run-to-completion
+    * queries, decoupled from the session's batch shuffle width via
+    * `graft.streaming.statePartitions` (default 8). State partitioning is
+    * fixed for a streaming query's lifetime at first start and each state
+    * partition pays per-micro-batch store open/commit I/O, so it should be
+    * sized to sustained throughput and key cardinality — NOT inherited from
+    * a compute-width conf tuned for batch scans (PerfLab `streamjoin`:
+    * the sf0.1 stream-stream join is 7.0 s at 32 state partitions, 2.0 s at
+    * 8 — pure store overhead, identical results). A production deployment
+    * raises the conf for high-cardinality keyed state.
+    */
+  private def stateParts(s: SparkSession): (String, String) =
+    "spark.sql.shuffle.partitions" ->
+      s.conf.getOption("graft.streaming.statePartitions").getOrElse("8")
+
+  private val fixtureBuilt =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
+
+  /** A stream fixture: a dir under the scratch base, built once per
+    * (`prefix`, `d`, fingerprint of `$d/$table`), holding each `(name, df)`
+    * of `files` as the single file `<name>.parquet`. Modification times are
+    * 60 s apart in `files` order: FileStreamSource takes files in modTime
+    * order, so with maxFilesPerTrigger=1 each file is one micro-batch, in
+    * `files` order. `files` is evaluated only on a build.
+    */
+  private[graft] def fixtureDir(s: SparkSession, d: String, table: String, prefix: String)(
+      files: => Seq[(String, DataFrame)]): String = {
+    val fp = graft.Artifacts.fingerprint(s, s"$d/$table")
+    graft.Artifacts.cachedLocation(fixtureBuilt, s"$prefix@$d", fp) { fpv =>
+      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+      val dir = new org.apache.hadoop.fs.Path(
+        graft.Artifacts.scratchBase(s), s"graft_${prefix}_fix_${slug}_$fpv")
+      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.delete(dir, true); fs.mkdirs(dir)
+      val staged = files
+      val t0 = System.currentTimeMillis()
+      staged.zipWithIndex.foreach { case ((name, df), i) =>
         val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
         df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
         val part = fs.listStatus(staging)
@@ -464,46 +516,11 @@ object Streams {
         val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
         fs.rename(part, target)
         fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
+        fs.setTimes(target, t0 - (staged.length - i) * 60000L, -1)
       }
-      val t0 = System.currentTimeMillis()
-      writeOne(ev.filter(col("ts") <= lit(cut2)), "batch0_oldera", t0 - 180000)
-      writeOne(ev.filter(lit(false)), "batch1_bridge", t0 - 120000)
-      writeOne(ev.filter(col("ts") > lit(cut2)), "batch2_newera", t0 - 60000)
       dir.toString
     }
   }
-
-  def streamingSessionTimers(s: SparkSession, d: String): DataFrame = {
-    val dir = twsFixtureDir(s, d)
-    val name = "graft_stream_twst_sink_" + sinkId.incrementAndGet()
-    import s.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val src = s.readStream
-        .schema("user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-        .withWatermark("ts", "1 hour")
-        .as[Ev2]
-      val q = src.groupByKey(_.user_id)
-        .transformWithState(new TwsTimedSession,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
-  }
-
-  private val sinkId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Bounded-file streaming source over `$d/events.parquet` with `ts`
     * normalized to TimestampType — the streaming twin of
@@ -550,24 +567,6 @@ object Streams {
     }
   }
 
-  /** Stateful-operator partition count for the gated run-to-completion
-    * queries, decoupled from the session's batch shuffle width via
-    * `graft.streaming.statePartitions` (default 8). State partitioning is
-    * fixed for a streaming query's lifetime at first start and each state
-    * partition pays per-micro-batch store open/commit I/O, so it should be
-    * sized to sustained throughput and key cardinality — NOT inherited from
-    * a compute-width conf tuned for batch scans (PerfLab `streamjoin`:
-    * the sf0.1 stream-stream join is 7.0 s at 32 state partitions, 2.0 s at
-    * 8 — pure store overhead, identical results). A production deployment
-    * raises the conf for high-cardinality keyed state.
-    */
-  private def withStateParts[T](s: SparkSession)(body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
-    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
-
   /** C5 as a CORRECTNESS-GATED query: exact streaming dedup over a bounded
     * file source — `dropDuplicates` state keyed on (user_id, event_type),
     * run to completion with an AvailableNow trigger into a memory sink,
@@ -575,33 +574,19 @@ object Streams {
     * batch/stream equality in-process; this entry keys it to the DuckDB
     * batch-DISTINCT oracle so the streaming block has a driver-checked
     * CORRECTNESS row too. The memory sink holds one row per DISTINCT pair —
-    * bounded by the key space, not the stream length — and each invocation
-    * registers a fresh uniquely-named sink view (a few KB each; a session
-    * running this thousands of times should drop them).
+    * bounded by the key space, not the stream length — and [[drain]] drops
+    * its view, so the rows live only as long as the returned frame.
     *
     * The explicit 2-column schema prunes the parquet scan to the dedup keys,
     * sidestepping the TIMESTAMP(NANOS) `ts` column entirely (see
     * Tables.events for the batch-side handling).
     */
-  def streamingDedup(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_dedup_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = s.readStream
-        .schema("user_id BIGINT, event_type STRING")
-        // the sf dirs ship events as a single FILE. FileStreamSource derives
-        // basePath from a NON-glob path as the path itself (a file → "must be
-        // a directory" failure; a user-supplied basePath option is overridden).
-        // A glob that matches exactly that file makes the derived basePath the
-        // parent directory, which is what the source needs.
-        .parquet(s"$d/{events.parquet}")
-        .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
-  }
+  def streamingDedup(s: SparkSession, d: String): DataFrame =
+    drain(s, "dedup", s.readStream
+      .schema("user_id BIGINT, event_type STRING")
+      .parquet(s"$d/{events.parquet}") // single-file glob: see [[eventsStream]]
+      .dropDuplicates("user_id", "event_type"),
+      "append", stateParts(s))
 
   /** C3 as a CORRECTNESS-GATED query: the same tumbling-window aggregation
     * as `windowedAgg`, run over the bounded file source to completion in
@@ -613,18 +598,9 @@ object Streams {
     * probe-and-branch [[eventsStream]] source, normalized identically to
     * the batch side.
     */
-  def streamingWindowAgg(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_winagg_sink_" + sinkId.incrementAndGet()
-    val src = eventsStream(s, d, "event_type STRING, value DOUBLE")
-    withStateParts(s) {
-      val q = windowedAgg(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
-  }
+  def streamingWindowAgg(s: SparkSession, d: String): DataFrame =
+    drain(s, "winagg", windowedAgg(eventsStream(s, d, "event_type STRING, value DOUBLE")),
+      "complete", stateParts(s))
 
   /** C6 as a CORRECTNESS-GATED query: stream-static enrichment — the event
     * stream joined per-micro-batch against a static broadcast dimension
@@ -635,22 +611,15 @@ object Streams {
     * event — fine at bench scale; a production run would write a file sink.
     */
   def streamingEnrich(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_enrich_sink_" + sinkId.incrementAndGet()
     val dim = graft.operators.Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    withStateParts(s) {
-      val q = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-        .parquet(s"$d/{events.parquet}")
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("c_mktsegment"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "enrich", s.readStream
+      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
+      .parquet(s"$d/{events.parquet}")
+      .join(broadcast(dim), col("user_id") === col("c_custkey"))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"), col("c_mktsegment")),
+      "append", stateParts(s))
   }
 
   /** C4 as a CORRECTNESS-GATED query: the flatMapGroupsWithState session
@@ -664,65 +633,33 @@ object Streams {
     * the emitted set is deterministic.
     */
   def streamingSessionize(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_sess_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     // normalized TimestampType → exact epoch-µs for the state machine
     val src = eventsStream(s, d, "user_id BIGINT, value DOUBLE")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]
-    withStateParts(s) {
-      val q = sessionize(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "sess", sessionize(src), "append", stateParts(s))
   }
 
   /** C30's gated driver: [[sessionizeTws]] run to completion over the
     * bounded source, on the RocksDB provider (set for this query, restored
     * after — transformWithState rejects the default HDFS-backed store). */
   def streamingSessionizeTws(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_tws_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "user_id BIGINT, value DOUBLE")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStateParts(s) {
-      val q = sessionizeTws(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    s.table(name)
+    drain(s, "tws", sessionizeTws(src), "append", stateParts(s), RocksDbProvider)
   }
 
   /** Fixture for C37: the event corpus split into two time-ordered halves
     * (one parquet file each), fingerprint-cached like the other stream
     * fixtures. Arrival ORDER is controlled per run by the recovery driver
-    * (phase 1 stages half0 only), so no modTime choreography is needed. */
-  private val recFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def recoveryFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(recFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_recov_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
+    * (phase 1 stages half0 only), so the fixture files' modTimes do not
+    * matter. */
+  private def recoveryFixtureDir(s: SparkSession, d: String): String =
+    fixtureDir(s, d, "events.parquet", "recov") {
+      val ev = graft.operators.Tables.events(s, d).select(col("user_id"), col("ts"))
       val mm = ev.agg(min(col("ts")), max(col("ts"))).head // 2 scalars, bounded
       val midMs = mm.getTimestamp(0).getTime +
         (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 2
@@ -751,23 +688,12 @@ object Streams {
         .limit(1).collect() // ≤1 row, bounded
       val cut = cutRow.headOption.map(_.getTimestamp(2))
         .getOrElse(new java.sql.Timestamp(midMs)) // degenerate-corpus fallback
-      def writeOne(df: DataFrame, name: String): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        fs.rename(part, new org.apache.hadoop.fs.Path(dir, s"$name.parquet"))
-        fs.delete(staging, true); ()
-      }
-      writeOne(ev.filter(col("ts") <= lit(cut)), "half0")
-      writeOne(ev.filter(col("ts") > lit(cut)), "half1")
       import s.implicits._
-      writeOne(Seq(cut.getTime / 1000 * 1000000L + cut.getNanos / 1000)
-        .toDF("cut_us"), "cutinfo")
-      dir.toString
+      Seq("half0" -> ev.filter(col("ts") <= lit(cut)),
+        "half1" -> ev.filter(col("ts") > lit(cut)),
+        "cutinfo" -> Seq(cut.getTime / 1000 * 1000000L + cut.getNanos / 1000)
+          .toDF("cut_us"))
     }
-  }
 
   /** The phase-boundary instant (epoch µs) the recovery fixture cut at —
     * spec accessor for asserting a session actually spans the restart. */
@@ -779,8 +705,9 @@ object Streams {
     * exercising — stop a stateful query with open state at a batch
     * boundary, start a NEW query from the same checkpoint, and the final
     * result is identical to the uninterrupted run. (The stop is graceful
-    * — processAllAvailable + stop — so what this key proves is state
-    * restoration and commit-log continuation across query objects;
+    * — every available batch processed, then stop — so what this key
+    * proves is state restoration and commit-log continuation across query
+    * objects;
     * restart after a MID-batch crash additionally leans on the file
     * sink's commit-log dedup of a partially written batch, which this
     * gate does not exercise.) Per invocation the corpus arrives as two
@@ -801,18 +728,16 @@ object Streams {
     * the gated key and the mid-batch-crash spec so the recovery property
     * is pinned on the SAME query. Returns the processed batch ids. */
   private[graft] def recoveryPhase(s: SparkSession, in: String, ckpt: String,
-      out: String): Seq[Long] = withStateParts(s) {
+      out: String): Seq[Long] = {
     import s.implicits._
     val src = s.readStream.schema("user_id BIGINT, ts TIMESTAMP")
       .parquet(s"$in/*.parquet")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         lit(0.0).as("value")).as[Ev]
-    val q = sessionizeTws(src)
+    run(s, sessionizeTws(src)
       .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    q.recentProgress.toSeq.map(_.batchId)
+      .option("checkpointLocation", ckpt).outputMode("append"),
+      stateParts(s), RocksDbProvider).map(_.batchId)
   }
 
   /** Spec accessor: the C37 fixture location (read-only). */
@@ -838,21 +763,12 @@ object Streams {
         fs, new org.apache.hadoop.fs.Path(in, name), false, hconf); ()
     }
     def runPhase(): Seq[Long] = recoveryPhase(s, in.toString, ckpt, out)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      arrive("half0.parquet")
-      runPhase() // phase 1: committed, then stopped with open state
-      arrive("half1.parquet")
-      val p2 = runPhase() // phase 2: fresh query, same checkpoint
-      require(p2.nonEmpty && p2.forall(_ >= 1),
-        s"phase 2 did not resume from the checkpoint: batch ids $p2")
-    } finally saved match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
+    arrive("half0.parquet")
+    runPhase() // phase 1: committed, then stopped with open state
+    arrive("half1.parquet")
+    val p2 = runPhase() // phase 2: fresh query, same checkpoint
+    require(p2.nonEmpty && p2.forall(_ >= 1),
+      s"phase 2 did not resume from the checkpoint: batch ids $p2")
     s.read.parquet(out)
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
@@ -860,41 +776,16 @@ object Streams {
   /** Fixture for C38: orders split into three date-ordered CDC slices, the
     * arrival choreography the other stream fixtures use (modTime order +
     * maxFilesPerTrigger=1 → one slice per micro-batch). */
-  private val cdcFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def cdcFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/orders.parquet")
-    graft.Artifacts.cachedLocation(cdcFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_cdc_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val o = Tables.orders(s, d)
+  private def cdcFixtureDir(s: SparkSession, d: String): String =
+    fixtureDir(s, d, "orders.parquet", "cdc") {
+      val o = graft.operators.Tables.orders(s, d)
         .select(col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
       val c1 = expr("timestamp'1996-01-01 00:00:00'")
       val c2 = expr("timestamp'1998-01-01 00:00:00'")
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1); ()
-      }
-      val t0 = System.currentTimeMillis()
-      writeOne(o.filter(col("o_orderdate") < c1), "cdc0", t0 - 180000)
-      writeOne(o.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2),
-        "cdc1", t0 - 120000)
-      writeOne(o.filter(col("o_orderdate") >= c2), "cdc2", t0 - 60000)
-      dir.toString
+      Seq("cdc0" -> o.filter(col("o_orderdate") < c1),
+        "cdc1" -> o.filter(col("o_orderdate") >= c1 && col("o_orderdate") < c2),
+        "cdc2" -> o.filter(col("o_orderdate") >= c2))
     }
-  }
 
   /** Spec accessor: the CDC fixture location (read-only). */
   private[graft] def cdcFixtureDirForSpec(s: SparkSession, d: String): String =
@@ -1159,19 +1050,16 @@ object Streams {
     fs.delete(base, true); fs.mkdirs(base)
     val snap = new org.apache.hadoop.fs.Path(base, "snap").toString
     val ckpt = new org.apache.hadoop.fs.Path(base, "ckpt").toString
-    withStateParts(s) {
-      // NTZ, matching the batch reader's type for the same parquet (the
-      // oracle compares naive timestamps)
-      val q = s.readStream
-        .schema("o_custkey BIGINT, o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$fix/*.parquet")
-        .writeStream
-        .foreachBatch((b: DataFrame, id: Long) => applyCdcBatch(s, snap, b, id))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.stop()
-    }
+    // NTZ, matching the batch reader's type for the same parquet (the
+    // oracle compares naive timestamps)
+    run(s, s.readStream
+      .schema("o_custkey BIGINT, o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$fix/*.parquet")
+      .writeStream
+      .foreachBatch((b: DataFrame, id: Long) => applyCdcBatch(s, snap, b, id))
+      .option("checkpointLocation", ckpt),
+      stateParts(s))
     val df = readCdcSnapshot(s, snap)
       .select(col("o_custkey"), col("n_orders"), col("last_odate"),
         col("sum_dec").cast("double").as("sum_price"))
@@ -1192,7 +1080,6 @@ object Streams {
     * formulation; the streaming operator is the scale path.)
     */
   def streamingJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_join_sink_" + sinkId.incrementAndGet()
     def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -1200,18 +1087,12 @@ object Streams {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"))
-        .select(col("p_id"), col("c_id"), col("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "join", purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
+          col("c_ts") <= col("p_ts"))
+      .select(col("p_id"), col("c_id"), col("user_id")),
+      "append", stateParts(s))
   }
 
   /** C26 — stream-stream LEFT OUTER time-bounded join (round-12; completes
@@ -1230,7 +1111,6 @@ object Streams {
     * null row — asserted by the spec's accounting.
     */
   def streamingOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_ojoin_sink_" + sinkId.incrementAndGet()
     def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -1238,19 +1118,13 @@ object Streams {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"),
-          "left_outer")
-        .select(col("p_id"), col("c_id"), col("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "ojoin", purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
+          col("c_ts") <= col("p_ts"),
+        "left_outer")
+      .select(col("p_id"), col("c_id"), col("user_id")),
+      "append", stateParts(s))
   }
 
   /** C29 — stream-stream FULL OUTER time-bounded join (round-12 verdict
@@ -1267,7 +1141,6 @@ object Streams {
     * non-emitting.
     */
   def streamingFullOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_fojoin_sink_" + sinkId.incrementAndGet()
     def src = eventsStream(s, d, "event_id BIGINT, user_id BIGINT, event_type STRING")
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
@@ -1275,20 +1148,14 @@ object Streams {
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    withStateParts(s) {
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
-            col("c_ts") <= col("p_ts"),
-          "full_outer")
-        .select(col("p_id"), col("c_id"),
-          coalesce(col("user_id"), col("c_user")).as("user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "fojoin", purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("interval 30 minutes") &&
+          col("c_ts") <= col("p_ts"),
+        "full_outer")
+      .select(col("p_id"), col("c_id"),
+        coalesce(col("user_id"), col("c_user")).as("user_id")),
+      "append", stateParts(s))
   }
 
   case class FunnelEv(user_id: Long, event_type: String, ts_us: Long)
@@ -1341,19 +1208,11 @@ object Streams {
     * against the SAME oracle as the batch `event_funnel`.
     */
   def streamingFunnel(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_funnel_sink_" + sinkId.incrementAndGet()
     import s.implicits._
     val src = eventsStream(s, d, "user_id BIGINT, event_type STRING")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
       .as[FunnelEv]
-    withStateParts(s) {
-      val q = funnelStages(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val stages = s.table(name)
+    val stages = drain(s, "funnel", funnelStages(src), "append", stateParts(s))
       .groupBy(col("user_id")).agg(max(col("stage")).as("stage"))
     def stageRow(k: Int, nm: String): DataFrame =
       stages.filter(col("stage") >= k).agg(count(lit(1)).as("n_users"))
@@ -1370,22 +1229,14 @@ object Streams {
     * against the SAME oracle as `events_rate_alert`.
     */
   def streamingRateAlert(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_alert_sink_" + sinkId.incrementAndGet()
-    val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    val hourly = drain(s, "alert", eventsStream(s, d, "event_type STRING")
+      .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
+      .agg(count(lit(1)).as("n")),
+      "complete", stateParts(s))
     // the drained sink joins a derivation of ITSELF; the shared helper
     // aliases the stats side so the MemoryPlan self-join's attribute
     // references stay distinct
-    graft.operators.Signals.rateAlertFrom(
-      s.table(name).alias("h"), s.table(name))
+    graft.operators.Signals.rateAlertFrom(hourly.alias("h"), hourly)
   }
 
   /** C16 — streaming count-min sketch (batch B55's twin): the counter grid
@@ -1398,18 +1249,12 @@ object Streams {
     */
   def streamingFreqSketch(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Signals
-    val name = "graft_stream_cms_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Signals.cmsGridKeys(
-          s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"))
-        .groupBy(col("r"), col("bucket"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Signals.cmsEstimatesFrom(s.table(name),
+    val grid = drain(s, "cms", Signals.cmsGridKeys(
+        s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"))
+      .groupBy(col("r"), col("bucket"))
+      .agg(count(lit(1)).as("c")),
+      "complete", stateParts(s))
+    Signals.cmsEstimatesFrom(grid,
       graft.operators.Tables.events(s, d).select(col("user_id")))
   }
 
@@ -1425,19 +1270,12 @@ object Streams {
     */
   def streamingHllDistinct(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Relational
-    val name = "graft_stream_hll_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Relational.hllBucketRho(
-          s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"),
-          "user_id")
-        .groupBy(col("bucket"))
-        .agg(max(col("rho")).as("reg"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Relational.hllFromRegs(s.table(name))
+    Relational.hllFromRegs(drain(s, "hll", Relational.hllBucketRho(
+        s.readStream.schema("user_id BIGINT").parquet(s"$d/{events.parquet}"),
+        "user_id")
+      .groupBy(col("bucket"))
+      .agg(max(col("rho")).as("reg")),
+      "complete", stateParts(s)))
   }
 
   /** C18 — streaming quantile estimates (batch B36's twin): the fixed-width
@@ -1451,19 +1289,12 @@ object Streams {
     */
   def streamingQuantileHist(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Analytics
-    val name = "graft_stream_aq_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Analytics.aqBinned(
-          s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
-            .parquet(s"$d/{orders.parquet}"))
-        .groupBy(col("o_orderpriority"), col("bin"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Analytics.quantilesFromHist(s.table(name))
+    Analytics.quantilesFromHist(drain(s, "aq", Analytics.aqBinned(
+        s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
+          .parquet(s"$d/{orders.parquet}"))
+      .groupBy(col("o_orderpriority"), col("bin"))
+      .agg(count(lit(1)).as("c")),
+      "complete", stateParts(s)))
   }
 
   /** C21 — streaming twin of B61's log-bucket rank sketch: the stream
@@ -1477,19 +1308,12 @@ object Streams {
     */
   def streamingQuantileSketch(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Analytics
-    val name = "graft_stream_dd_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val q = Analytics.ddBucketed(
-          s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
-            .parquet(s"$d/{orders.parquet}"))
-        .groupBy(col("o_orderpriority"), col("idx"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Analytics.ddSketchReport(s.table(name))
+    Analytics.ddSketchReport(drain(s, "dd", Analytics.ddBucketed(
+        s.readStream.schema("o_orderpriority STRING, o_totalprice DOUBLE")
+          .parquet(s"$d/{orders.parquet}"))
+      .groupBy(col("o_orderpriority"), col("idx"))
+      .agg(count(lit(1)).as("c")),
+      "complete", stateParts(s)))
   }
 
   /** C19 — streaming per-window top-k: the trending-items query every event
@@ -1508,19 +1332,11 @@ object Streams {
 
   def streamingTopK(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val name = "graft_stream_topk_sink_" + sinkId.incrementAndGet()
-    val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("hour_start"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    drain(s, "topk", eventsStream(s, d, "event_type STRING")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("hour_start"), col("event_type"), col("n")),
+      "complete", stateParts(s))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("hour_start")).orderBy(col("n").desc, col("event_type"))))
       .filter(col("rank") <= StreamTopK)
@@ -1537,21 +1353,12 @@ object Streams {
     * the stream would re-fold every micro-batch for no freshness gain.
     * Gated against C22's recursive-CTE oracle.
     */
-  def streamingCusumShift(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_cusum_sink_" + sinkId.incrementAndGet()
-    val src = eventsStream(s, d, "event_type STRING")
-    withStateParts(s) {
-      val q = src
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("h"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    graft.operators.Signals.cusumReport(s.table(name))
-  }
+  def streamingCusumShift(s: SparkSession, d: String): DataFrame =
+    graft.operators.Signals.cusumReport(drain(s, "cusum", eventsStream(s, d, "event_type STRING")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("h"), col("event_type"), col("n")),
+      "complete", stateParts(s)))
 
   /** C25 — the LATE-DATA gate (round-11 verdict item 5): watermarks are
     * used throughout C3-C7, but nothing PROVED rows behind the watermark
@@ -1573,41 +1380,20 @@ object Streams {
     * end (append mode, unlike C3's complete-mode gate, so emission timing
     * itself is under test). StreamingSpec pins the dropped-row count.
     */
-  private val lateFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Planted-late predicate, shared by the fixture build, the oracle text,
     * and the spec's recount. */
   private def isLate(maxTs: java.sql.Timestamp) =
     pmod(col("event_id"), lit(10L)) === 0 &&
       col("ts") <= lit(new java.sql.Timestamp(maxTs.getTime - 3L * 3600 * 1000))
 
-  private def lateFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(lateFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_late_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val ev = Tables.events(s, d)
+  private def lateFixtureDir(s: SparkSession, d: String): String =
+    fixtureDir(s, d, "events.parquet", "late") {
+      val ev = graft.operators.Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
       val late = isLate(maxTs)
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
-      }
-      // modTimes 60 s apart pin the batch order: on-time, an EMPTY bridge,
+      // the file order pins the batch order: on-time, an EMPTY bridge,
       // then the late set. The bridge batch is load-bearing: Spark's
       // late-event filter deliberately uses the PREVIOUS batch's watermark
       // (SPARK-24634 — a batch must not drop rows a retried predecessor
@@ -1617,13 +1403,10 @@ object Streams {
       // same-batch by the already-advanced eviction watermark). One empty
       // batch in between advances the filter watermark to max(ts) - 1h
       // before any late row arrives.
-      val t0 = System.currentTimeMillis()
-      writeOne(ev.filter(!late), "batch0_ontime", t0 - 180000)
-      writeOne(ev.filter(lit(false)), "batch1_bridge", t0 - 120000)
-      writeOne(ev.filter(late), "batch2_late", t0 - 60000)
-      dir.toString
+      Seq("batch0_ontime" -> ev.filter(!late),
+        "batch1_bridge" -> ev.filter(lit(false)),
+        "batch2_late" -> ev.filter(late))
     }
-  }
 
   /** Probe access: per-batch progress of the last late-data run. */
   @volatile private[graft] var lastProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
@@ -1662,20 +1445,10 @@ object Streams {
     */
   val DedupTtlUs: Long = 6L * 3600 * 1000000
 
-  private val dedupFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def dedupFixtureDir(s: SparkSession, d: String): String = {
-    import graft.operators.Tables
-    import org.apache.spark.sql.expressions.Window
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(dedupFixtureBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_ddw_fix_${slug}_$fpv")
-      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(dir, true); fs.mkdirs(dir)
-      val ev = Tables.events(s, d)
+  private def dedupFixtureDir(s: SparkSession, d: String): String =
+    fixtureDir(s, d, "events.parquet", "ddw") {
+      import org.apache.spark.sql.expressions.Window
+      val ev = graft.operators.Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // scalar, bounded
       val cut2 = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
@@ -1691,68 +1464,38 @@ object Streams {
       val late = ev
         .filter(pmod(col("event_id"), lit(10L)) === 0 && col("ts") <= lit(lateCut))
         .select(col("user_id"), col("event_type"), col("ts"))
-      def writeOne(df: DataFrame, name: String, modTime: Long): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(dir, s"_stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-        val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-        fs.rename(part, target)
-        fs.delete(staging, true)
-        fs.setTimes(target, modTime, -1)
-      }
-      val t0 = System.currentTimeMillis()
-      writeOne(registry, "batch0_registry", t0 - 240000)
-      writeOne(registry.filter(lit(false)), "batch1_bridge", t0 - 180000)
-      writeOne(newEra, "batch2_newera", t0 - 120000)
-      writeOne(late, "batch3_late", t0 - 60000)
-      dir.toString
+      Seq("batch0_registry" -> registry,
+        "batch1_bridge" -> registry.filter(lit(false)),
+        "batch2_newera" -> newEra,
+        "batch3_late" -> late)
     }
-  }
 
   /** Probe access: per-batch progress of the last bounded-dedup run. */
   @volatile private[graft] var lastDedupProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
 
   def streamingDedupWithinWatermark(s: SparkSession, d: String): DataFrame = {
-    val dir = dedupFixtureDir(s, d)
-    val name = "graft_stream_ddw_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val src = s.readStream
-        .schema("user_id BIGINT, event_type STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-      val q = src
-        .withWatermark("ts", "6 hours")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      lastDedupProgress = q.recentProgress.toSeq
-      q.stop()
-    }
-    s.table(name)
-      .groupBy(col("user_id"), col("event_type"))
+    val (out, progress) = drainWithProgress(s, "ddw", s.readStream
+      .schema("user_id BIGINT, event_type STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"${dedupFixtureDir(s, d)}/*.parquet")
+      .withWatermark("ts", "6 hours")
+      .dropDuplicatesWithinWatermark("user_id", "event_type"),
+      "append", stateParts(s))
+    lastDedupProgress = progress
+    out.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_emits"))
   }
 
   def streamingLateData(s: SparkSession, d: String): DataFrame = {
-    val dir = lateFixtureDir(s, d)
-    val name = "graft_stream_late_sink_" + sinkId.incrementAndGet()
-    withStateParts(s) {
-      val src = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
-          "value DOUBLE, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/*.parquet")
-      val q = windowedAgg(src.drop("event_id", "user_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable()
-      lastProgress = q.recentProgress.toSeq
-      q.stop()
-    }
-    s.table(name)
+    val src = s.readStream
+      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
+        "value DOUBLE, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"${lateFixtureDir(s, d)}/*.parquet")
+    val (out, progress) = drainWithProgress(s, "late",
+      windowedAgg(src.drop("event_id", "user_id")), "append", stateParts(s))
+    lastProgress = progress
+    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -480,10 +480,6 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "start_us", "end_us", "n_events")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       arrive("half0.parquet")
       val p1 = Streams.recoveryPhase(spark, in.toString, ckpt, out)
@@ -514,13 +510,7 @@ class StreamingSpec extends SparkSpec {
       assert(finalRows.size > afterPhase1.size &&
         afterPhase1.forall(finalRows.contains),
         "phase-1 sessions must survive unchanged under the final view")
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      fs.delete(base, true); ()
-    }
+    } finally { fs.delete(base, true); () }
   }
 
   test("C38: buckets >> delta keys — touched buckets ~ |delta|, write parallelism tracks the delta") {
@@ -797,6 +787,43 @@ class StreamingSpec extends SparkSpec {
     val est = got.getDouble(0)
     assert(est >= exact.toDouble, s"estimate $est below exact $exact")
   }
+
+  private def sinkViews(): Seq[String] =
+    spark.catalog.listTables().collect().toSeq
+      .filter(t => t.isTemporary &&
+        (t.name.startsWith("graft_stream") || t.name.startsWith("graft_pipe_drain")))
+      .map(_.name)
+
+  test("drain: no key leaves a sink view behind, and each returned frame re-executes") {
+    val in = Files.createTempDirectory("graft-drain-pipe").toString + "/in"
+    graft.pipeline.Pipe.create(spark, Seq("a b", "b c")).writeText(in)
+    val frames = Streams.queries.toSeq.sortBy(_._1).map { case (k, q) => k -> q(spark, sf) } :+
+      ("pipe_drain" -> graft.pipeline.Pipe.drain(graft.pipeline.Pipe.readStreamText(spark, in)))
+    assert(sinkViews().isEmpty, s"sink views left: ${sinkViews()}")
+    frames.foreach { case (k, df) =>
+      val n = df.count()
+      val out = Files.createTempDirectory("graft-drain-rewrite").toString + "/out"
+      df.write.parquet(out)
+      assert(spark.read.parquet(out).count() == n, s"$k: second write lost rows")
+    }
+  }
+
+  test("run: a failing stream stops its query and restores every conf it set") {
+    val partsKey = "spark.sql.shuffle.partitions"
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val saved = (spark.conf.get(partsKey), spark.conf.getOption(provKey))
+    val failing = spark.readStream.schema("user_id BIGINT").parquet(s"$sf/{events.parquet}")
+      .as[Long].map(u => if (u > Long.MinValue) throw new IllegalStateException("boom") else u)
+    val confs = Seq(partsKey -> "3", provKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    intercept[Exception](Streams.run(spark, failing.writeStream.format("noop"), confs: _*))
+    assert(spark.streams.active.isEmpty, "a failed run left an active query")
+    assert((spark.conf.get(partsKey), spark.conf.getOption(provKey)) == saved)
+    intercept[Exception](Streams.drain(spark, "boom", failing, "append", confs: _*))
+    assert(spark.streams.active.isEmpty && sinkViews().isEmpty)
+    assert((spark.conf.get(partsKey), spark.conf.getOption(provKey)) == saved)
+  }
+
   test("C23 streaming CUSUM drains to exactly the batch change-point report") {
     val stream = Streams.streamingCusumShift(spark, sf)
     val batch = graft.operators.Signals.eventsCusumShift(spark, sf)

@@ -146,6 +146,10 @@ class TpchMoreSpec extends SparkSpec {
       assert(dist.keySet == local.keySet, "node sets diverge")
       val bad = dist.collect { case (n, p) if local(n) != p => (n, p, local(n)) }
       assert(bad.isEmpty, s"ranks diverge (dist, local): ${bad.take(5)}")
+      // a cap the Int-sized edge take cannot honor fails loudly instead of
+      // ranking a truncated edge list
+      spark.conf.set("graft.graph.localMaxEdges", Int.MaxValue.toString)
+      intercept[IllegalArgumentException](graft.operators.Graph.pageRank(spark, sf))
     } finally spark.conf.unset("graft.graph.localMaxEdges")
   }
 

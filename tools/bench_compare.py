@@ -12,8 +12,16 @@ import sys
 
 
 def queries(path):
+    """The per-key seconds map of a bench artifact: top-level `queries`
+    (bench headline), `parsed.queries` (driver artifact), or a bare map."""
     d = json.load(open(path))
-    return d.get("queries") or d
+    q = (d.get("parsed") or d).get("queries")
+    if q is None and all(isinstance(v, (int, float)) for v in d.values()):
+        q = d
+    if not isinstance(q, dict):
+        sys.exit(f"{path}: no per-query map (a driver artifact whose "
+                 "'parsed' is null carries no per-key times)")
+    return q
 
 
 def main():
