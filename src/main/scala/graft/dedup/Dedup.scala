@@ -215,7 +215,10 @@ object Dedup {
     val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
     if (!names.forall(s.catalog.tableExists) ||
         graft.Artifacts.tableStale(s, prefixTbl, fp)) {
-      names.foreach(resetTable(s, _))
+      // the pre-r18 string-keyed tables go with every rebuild, so a
+      // warehouse an older build left behind stops carrying them
+      val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
+      (names ++ legacy).foreach(resetTable(s, _))
       val nb = edgeBuckets(s)
       val old = withShingles(Tables.documents(s, d).filter(isOld))
         .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))

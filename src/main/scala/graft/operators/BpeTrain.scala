@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,34 +12,35 @@ import graft.plans.BpeDynamic
   * learning (Sennrich et al. 2016), which H18b only APPLIED from a fixed
   * demo table.
   *
-  * Training is K rounds of corpus-wide max-frequency bigram selection, the
-  * [[Graph.pagerank]] loop discipline: each round is ONE distributed
-  * aggregation (per-doc adjacent-pair keys under the rules learned so far
-  * — a native kernel, [[graft.plans.BpeDynamic]] — exploded into Spark's
-  * map-side-combining count agg) plus ONE broadcast of the winning rule
-  * (driver state = the K-row rule table; the 1-row argmax `head()` is a
-  * bounded collect by construction). Tie-breaks are deterministic: count
-  * DESC, then pair key (a·2^21+b) ASC — `max(struct(cnt, -pk))` on the
-  * Spark side, `ORDER BY cnt DESC, pk ASC LIMIT 1` in the oracle. Merge
-  * symbols are allocated in the Unicode PRIVATE USE AREA (U+E100+r), so
-  * the DuckDB oracle can replay every round as a literal string rewrite —
-  * the pinned H18b equivalence (a merge pass == a left-to-right
-  * non-overlapping `replace`).
+  * Training is K rounds of corpus-wide max-frequency bigram selection in
+  * the reference runner's CombinePerKey shape (one `aggregateByKey` job
+  * with map-side partial aggregation): the corpus texts are persisted once
+  * as an RDD, and each round is ONE action over them — per-partition
+  * adjacent-pair counts under the rules learned so far (the native rule
+  * kernel, [[graft.plans.BpeDynamic.applyRules]]), `reduceByKey`, and a
+  * `reduce` to the winning pair. Driver state is the K-row rule table plus
+  * one pair per round. Tie-breaks are deterministic: count DESC, then pair
+  * key (a·2^21+b) ASC — the `reduce` on the Spark side, `ORDER BY cnt
+  * DESC, pk ASC LIMIT 1` in the oracle. Merge symbols are allocated in the
+  * Unicode PRIVATE USE AREA (U+E100+r), so the DuckDB oracle can replay
+  * every round as a literal string rewrite — the pinned H18b equivalence
+  * (a merge pass == a left-to-right non-overlapping `replace`).
   *
   * The learned table is a STORED ARTIFACT (parquet, versioned by corpus
   * fingerprint via [[graft.Artifacts.cachedLocation]] — the F3/F5 index
-  * discipline): training runs once per corpus generation, and every
-  * consumer (the gated readback, the learned token counts, the learned
-  * packing) reads the stored table instead of retraining.
+  * discipline): training runs once per corpus generation. The consumers
+  * (the learned token counts, the learned packing, coverage, id emission)
+  * read the stored table once per location and then serve it from driver
+  * memory; the gated readbacks read the parquet itself.
   *
   * Scale shape: a round's shuffle carries only DISTINCT pair keys after
   * map-side combine (vocabulary-sized, not corpus-sized); the argmax is a
-  * single-row global agg; the corpus is scanned K times — at 100 TB one
-  * would sample the pair statistics (sentencepiece does), which is one
-  * `TABLESAMPLE` away from this exact plan. Oracle: the full K-round
-  * replay as MATERIALIZED CTEs (inlined CTEs re-derive the whole replace
-  * chain per round — O(K²·corpus); materialization keeps the replay
-  * linear, measured 115 s → 1.1 s at sf0.01).
+  * `reduce` over them; no round plans SQL or compiles code, and the
+  * corpus is scanned K times from the persisted copy — at 100 TB one
+  * would sample the pair statistics (sentencepiece does). Oracle: the full
+  * K-round replay as MATERIALIZED CTEs (inlined CTEs re-derive the whole
+  * replace chain per round — O(K²·corpus); materialization keeps the
+  * replay linear, measured 115 s → 1.1 s at sf0.01).
   */
 object BpeTrain {
 
@@ -54,80 +56,99 @@ object BpeTrain {
   // training
   // ------------------------------------------------------------------
 
-  /** The shared K-round max-frequency loop over a prepared text frame.
-    * `excludeSym`: pairs touching this symbol are never counted — the
-    * pre-tokenization boundary (merges must not cross pre-token edges,
-    * and since excluded pairs are never learned, rule APPLICATION needs
-    * no change: no learned rule can contain the separator). */
-  private def trainLoop(docs: org.apache.spark.sql.DataFrame, mergeBase: Int,
+  /** The shared K-round max-frequency loop over the persisted corpus
+    * texts, one job per round: every partition applies the rules learned
+    * so far ([[BpeDynamic.applyRules]]) and counts its adjacent pair keys,
+    * `reduceByKey` combines them (only distinct keys shuffle), and
+    * `reduce` keeps the (count DESC, pair key ASC) argmax — one pair
+    * reaches the driver. `excludeSym`: pairs touching this symbol are
+    * never counted — the pre-tokenization boundary (merges must not cross
+    * pre-token edges, and since excluded pairs are never learned, rule
+    * APPLICATION needs no change: no learned rule can contain the
+    * separator). */
+  private def trainLoop(texts: RDD[String], mergeBase: Int,
       excludeSym: Option[Int]): Seq[(Int, Int, Int, Long)] = {
+    val ex = excludeSym.getOrElse(-1)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Long)]
-    var ra = Seq.empty[Int]; var rb = Seq.empty[Int]; var rm = Seq.empty[Int]
-    var r = 0
-    while (r < Rounds) {
-      val pairs = docs
-        .select(explode(BpeDynamic.pairKeysCol(col("text"), ra, rb, rm)).as("pk"))
-      val kept = excludeSym match {
-        case Some(x) => pairs.filter(expr(
-          s"pk DIV ${BpeDynamic.PairBase} <> ${x}L AND pk % ${BpeDynamic.PairBase} <> ${x}L"))
-        case None => pairs
-      }
-      val best = kept
-        .groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
-        .agg(max(struct(col("cnt"), (-col("pk")).as("npk"))).as("m"))
-        .select(col("m.cnt").as("cnt"), (-col("m.npk")).as("pk"))
-        .head()
-      val cnt = best.getLong(0)
-      val pk = best.getLong(1)
-      val a = (pk / BpeDynamic.PairBase).toInt
-      val b = (pk % BpeDynamic.PairBase).toInt
-      val m = mergeBase + r
-      out += ((a, b, m, cnt))
-      ra :+= a; rb :+= b; rm :+= m
-      r += 1
+    while (out.length < Rounds) {
+      val ra = out.map(_._1).toArray
+      val rb = out.map(_._2).toArray
+      val rm = out.map(_._3).toArray
+      val (pk, cnt) = texts
+        .mapPartitions { it =>
+          val cnt = scala.collection.mutable.LongMap.empty[Long]
+          it.foreach { t =>
+            val (arr, len) = BpeDynamic.applyRules(t, ra, rb, rm)
+            var i = 0
+            while (i + 1 < len) {
+              if (arr(i) != ex && arr(i + 1) != ex) {
+                val k = arr(i).toLong * BpeDynamic.PairBase + arr(i + 1)
+                cnt(k) = cnt.getOrElse(k, 0L) + 1
+              }
+              i += 1
+            }
+          }
+          cnt.iterator
+        }
+        .reduceByKey(_ + _)
+        .reduce { (x, y) =>
+          if (x._2 != y._2) { if (x._2 > y._2) x else y }
+          else if (x._1 < y._1) x else y
+        }
+      out += (((pk / BpeDynamic.PairBase).toInt, (pk % BpeDynamic.PairBase).toInt,
+        mergeBase + out.length, cnt))
     }
     out.toSeq
   }
 
-  /** One training run: K rounds over the persisted corpus. Returns
-    * (sym_a, sym_b, merged, n_pairs) per round in learned order. */
-  private def trainRules(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] = {
-    val docs = Tables.documents(s, d).select(col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainLoop(docs, MergeBase, None)
-    finally { docs.unpersist(blocking = false); () }
-  }
+  /** A learned rule table as (sym_a, sym_b, merged) columns. */
+  private[graft] type Rules = (Seq[Int], Seq[Int], Seq[Int])
 
-  private val rulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
+  /** One learned rule table, a STORED ARTIFACT: [[location]] trains it
+    * once per corpus fingerprint over the persisted `prep` texts and
+    * writes parquet; [[rules]] reads that once per location and then
+    * serves the K rows from driver memory (a regenerated corpus moves the
+    * location, which retrains and re-reads). */
+  private final class LearnedTable(
+      tag: String, prep: Column, mergeBase: Int, excludeSym: Option[Int]) {
+    private val built =
+      new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
+    private val memo =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, Rules)]()
 
-  /** Stored-artifact location of the learned table for corpus `d` (train
-    * once per corpus fingerprint, parquet out, consumers read back). */
-  private def rulesLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(rulesBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bpe_rules_${slug}_$fpv").toString
-      val rows = trainRules(s, d).zipWithIndex.map { case ((a, b, m, cnt), i) =>
-        (i + 1, a.toLong, b.toLong, m.toLong, cnt)
+    def location(s: SparkSession, d: String): String = {
+      val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
+      graft.Artifacts.cachedLocation(built, d, fp) { fpv =>
+        val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+        val dir = new org.apache.hadoop.fs.Path(
+          graft.Artifacts.scratchBase(s), s"graft_bpe_${tag}_${slug}_$fpv").toString
+        val rules = Tables.withTexts(Tables.documents(s, d).select(prep))(
+          trainLoop(_, mergeBase, excludeSym))
+        val rows = rules.zipWithIndex.map { case ((a, b, m, cnt), i) =>
+          (i + 1, a.toLong, b.toLong, m.toLong, cnt)
+        }
+        import s.implicits._
+        rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+        dir
       }
-      import s.implicits._
-      rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
+    }
+
+    def rules(s: SparkSession, d: String): Rules = {
+      val loc = location(s, d)
+      graft.Artifacts.cachedValue(memo, d, loc) {
+        val rows = s.read.parquet(loc).orderBy(col("round")).collect()
+        (rows.map(_.getAs[Long]("sym_a").toInt).toSeq,
+          rows.map(_.getAs[Long]("sym_b").toInt).toSeq,
+          rows.map(_.getAs[Long]("merged").toInt).toSeq)
+      }
     }
   }
 
-  /** The learned rule table, read back from the stored artifact (K rows —
-    * bounded driver state by construction). */
-  private[graft] def learnedRules(s: SparkSession, d: String): (Seq[Int], Seq[Int], Seq[Int]) = {
-    val rows = s.read.parquet(rulesLocation(s, d))
-      .orderBy(col("round")).collect()
-    (rows.map(_.getAs[Long]("sym_a").toInt).toSeq,
-      rows.map(_.getAs[Long]("sym_b").toInt).toSeq,
-      rows.map(_.getAs[Long]("merged").toInt).toSeq)
-  }
+  private val plain = new LearnedTable("rules", col("text"), MergeBase, None)
+
+  /** The learned rule table (sym_a, sym_b, merged), in learned order. */
+  private[graft] def learnedRules(s: SparkSession, d: String): Rules = plain.rules(s, d)
 
   // ------------------------------------------------------------------
   // gated operators
@@ -138,7 +159,7 @@ object BpeTrain {
     * won. Reads the STORED artifact — the gate proves the parquet
     * round-trip as well as the training. */
   def trainMerges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(rulesLocation(s, d))
+    s.read.parquet(plain.location(s, d))
       .select(col("round"), col("sym_a"), col("sym_b"), col("merged"), col("n_pairs"))
 
   /** H34 — per-document token counts under the LEARNED table (H18b's
@@ -384,39 +405,10 @@ object BpeTrain {
     s"regexp_replace($x, '$pat', '\\0' || chr($PretokSepCp), 'g')"
   }
 
-  private def trainRulesPretok(s: SparkSession, d: String): Seq[(Int, Int, Int, Long)] = {
-    val docs = Tables.documents(s, d).select(pretokCol(col("text")).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainLoop(docs, MergeBasePretok, Some(PretokSepCp))
-    finally { docs.unpersist(blocking = false); () }
-  }
+  private val pretok = new LearnedTable(
+    "pretok", pretokCol(col("text")), MergeBasePretok, Some(PretokSepCp))
 
-  private val pretokRulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def pretokRulesLocation(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(pretokRulesBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bpe_pretok_${slug}_$fpv").toString
-      val rows = trainRulesPretok(s, d).zipWithIndex.map { case ((a, b, m, cnt), i) =>
-        (i + 1, a.toLong, b.toLong, m.toLong, cnt)
-      }
-      import s.implicits._
-      rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      dir
-    }
-  }
-
-  private[graft] def learnedRulesPretok(s: SparkSession, d: String): (Seq[Int], Seq[Int], Seq[Int]) = {
-    val rows = s.read.parquet(pretokRulesLocation(s, d))
-      .orderBy(col("round")).collect()
-    (rows.map(_.getAs[Long]("sym_a").toInt).toSeq,
-      rows.map(_.getAs[Long]("sym_b").toInt).toSeq,
-      rows.map(_.getAs[Long]("merged").toInt).toSeq)
-  }
+  private[graft] def learnedRulesPretok(s: SparkSession, d: String): Rules = pretok.rules(s, d)
 
   /** H41 — the PRE-TOKENIZED merge table: training never counts a pair
     * across a pre-token boundary, the structural gap between plain BPE
@@ -424,7 +416,7 @@ object BpeTrain {
     * regex pre-tokens). The spec shows the learned rules genuinely differ
     * from H33's boundary-free table. */
   def trainMergesPretok(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pretokRulesLocation(s, d))
+    s.read.parquet(pretok.location(s, d))
       .select(col("round"), col("sym_a"), col("sym_b"), col("merged"), col("n_pairs"))
 
   /** H42 — tokenizer fertility RE-DERIVED under the pre-tokenized learned

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet table loaders for the star schema + LLM-pipeline tables.
   *
@@ -125,4 +127,14 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
+
+  /** Run `f` over the one-string-column frame `texts` as a persisted
+    * RDD[String] (null rows dropped): the corpus the tokenizer trainers
+    * scan once per round. Unpersisted when `f` returns or throws. */
+  private[operators] def withTexts[T](texts: DataFrame)(f: RDD[String] => T): T = {
+    val rdd = texts.rdd.flatMap(r => Option(r.getString(0)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try f(rdd)
+    finally { rdd.unpersist(blocking = false); () }
+  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,10 +12,11 @@ import org.apache.spark.sql.functions._
   * ship both families; H30/H42 fertility now has a second learned
   * vocabulary to compare against.
   *
-  * The loop follows the [[BpeTrain]]/[[QualityTrain]] discipline — per
-  * round ONE distributed aggregation (usage counts over the segmented
-  * corpus, map-side combined into ≤[[SeedN]] longs) plus ONE driver-side
-  * vocabulary update (driver state = the ≤[[SeedN]]-row piece table):
+  * The loop has the reference runner's CombinePerKey shape (one
+  * `aggregateByKey` job with map-side partial aggregation): the persisted
+  * corpus texts are an RDD, and each round is ONE action over them plus
+  * ONE driver-side vocabulary update. Driver state is the ≤[[SeedN]]-row
+  * piece table and one [[SeedN]]-long usage array per round:
   *   - SEED: the top-[[SeedN]] intra-word character n-grams (n ∈ 2..4,
   *     positional counts with overlaps — the H15-style corpus statistic)
   *     by (count DESC, piece ASC); segmentation PRIORITY (pid) re-ranks
@@ -26,12 +28,13 @@ import org.apache.spark.sql.functions._
   *     often each piece is actually used. Segmentation is PRIORITY-ORDERED
   *     NON-OVERLAPPING REWRITE — each live piece, in pid order, is
   *     globally replaced by its private-use-area symbol (U+E300+pid−1) —
-  *     rather than Viterbi: the rewrite replays bit-exactly as a `replace`
-  *     chain in BOTH engines (the H33 device), while Viterbi's
-  *     max-likelihood DP would pin the gate to float log-prob ties. This
-  *     is hard-EM with a deterministic segmenter — the honest trade, and
-  *     the loop structure (estimate usage → re-weight → prune) is the
-  *     unigram-LM one.
+  *     rather than Viterbi: the rewrite is a literal `String.replace`
+  *     chain that replays bit-exactly as a `replace` chain in BOTH SQL
+  *     engines (the H33 device, and the shape [[fertilityUlm]] plans),
+  *     while Viterbi's max-likelihood DP would pin the gate to float
+  *     log-prob ties. This is hard-EM with a deterministic segmenter — the
+  *     honest trade, and the loop structure (estimate usage → re-weight →
+  *     prune) is the unigram-LM one.
   *   - M-STEP: drop the [[Prune]] least-used live pieces (usage ASC,
   *     piece DESC — total order, piece is unique); survivors keep their
   *     seed priority.
@@ -47,11 +50,15 @@ import org.apache.spark.sql.functions._
   * symbol or one unmatched character, so tokens = length of the segmented
   * string, exactly the BPE twin's accounting.
   *
-  * Scale shape: seeding is one corpus scan into a vocabulary-sized
-  * aggregate + TakeOrdered(SeedN); each round is one corpus scan through
-  * a ≤SeedN-deep codegen'd replace chain and a ≤SeedN-column sum; rounds
-  * never grow driver state past the piece table. At 100 TB the pair
-  * statistics sample exactly like BPE's (one TABLESAMPLE away).
+  * Scale shape: training persists the corpus texts once. Seeding is one
+  * job (per-partition n-gram counts, `reduceByKey`, `takeOrdered(SeedN)`,
+  * so only distinct n-grams shuffle); each round is one job whose
+  * partitions each return a SeedN-long array, summed on the driver — no
+  * shuffle, no per-round plan or codegen. Rounds never grow driver state
+  * past the piece table. The trajectory is written once per corpus
+  * fingerprint, and the final vocabulary is then served from driver
+  * memory, so warm calls read no parquet. At 100 TB the n-gram statistics
+  * would sample exactly like BPE's.
   */
 object UlmTrain {
 
@@ -75,26 +82,36 @@ object UlmTrain {
   private def puaStr(pid: Long): String =
     new String(Character.toChars((PuaBase + pid - 1).toInt))
 
-  /** Intra-word character n-grams (n ∈ 2..4), every position, overlaps
-    * included — shared text with the oracle's `ungr` CTE. */
-  private def ngramsCol: Column = expr(
-    "flatten(transform(sequence(2, 4), n -> " +
-      "filter(transform(sequence(1, length(text)), i -> substring(text, i, n)), " +
-      "p -> length(p) = n AND NOT contains(p, ' '))))")
-
   /** The seeded piece table: (pid, piece, cnt). SELECTION is the top
-    * SeedN by (cnt DESC, piece ASC); pid (segmentation priority) re-ranks
-    * the selected set by (length DESC, cnt DESC, piece ASC) — maximal
-    * munch. ≤ SeedN rows — bounded by construction. Lengths are code
-    * points (both engines' `length`), not UTF-16 units. */
-  private def computeSeed(s: SparkSession, d: String): Seq[(Long, String, Long)] =
-    Tables.documents(s, d)
-      .select(explode(ngramsCol).as("piece"))
-      .groupBy(col("piece")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("piece"))
-      .limit(SeedN)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    * SeedN intra-word character n-grams (n ∈ 2..4, every position,
+    * overlaps included, no ' ') by (cnt DESC, piece ASC); pid (segmentation
+    * priority) re-ranks the selected set by (length DESC, cnt DESC, piece
+    * ASC) — maximal munch. One job: per-partition counts, `reduceByKey`,
+    * `takeOrdered` — ≤ SeedN rows reach the driver. Lengths are code points
+    * (both engines' `length`), not UTF-16 units. */
+  private def computeSeed(texts: RDD[String]): Seq[(Long, String, Long)] =
+    texts
+      .mapPartitions { it =>
+        val cnt = scala.collection.mutable.HashMap.empty[String, Long]
+        it.foreach { t =>
+          val cps = t.codePoints.toArray
+          var n = 2
+          while (n <= 4) {
+            var i = 0
+            while (i + n <= cps.length) {
+              val p = new String(cps, i, n)
+              if (p.indexOf(' ') < 0) cnt(p) = cnt.getOrElse(p, 0L) + 1
+              i += 1
+            }
+            n += 1
+          }
+        }
+        cnt.iterator
+      }
+      .reduceByKey(_ + _)
+      .takeOrdered(SeedN)(Ordering.fromLessThan[(String, Long)] {
+        case ((pa, ca), (pb, cb)) => if (ca != cb) ca > cb else u8Lt(pa, pb)
+      })
       .sortWith { case ((pa, ca), (pb, cb)) =>
         val la = pa.codePointCount(0, pa.length)
         val lb = pb.codePointCount(0, pb.length)
@@ -125,27 +142,49 @@ object UlmTrain {
       call_function("replace", acc, lit(piece), lit(puaStr(pid)))
     }
 
+  /** E-step of one round, one job: every partition rewrites each live
+    * piece, in pid order, to its symbol with a literal `String.replace`
+    * (Spark `replace`'s semantics) and counts the symbols into a
+    * SeedN-long usage array (index pid − 1); the driver sums the arrays. */
+  private def roundUsage(texts: RDD[String], live: Seq[(Long, String)]): Array[Long] = {
+    val pieces = live.map(_._2).toArray
+    val syms = live.map(p => puaStr(p._1)).toArray
+    texts
+      .mapPartitions { it =>
+        val use = new Array[Long](SeedN)
+        it.foreach { t =>
+          var seg = t
+          var k = 0
+          while (k < pieces.length) { seg = seg.replace(pieces(k), syms(k)); k += 1 }
+          var i = 0
+          while (i < seg.length) {
+            val j = seg.charAt(i) - PuaBase
+            if (j >= 0 && j < SeedN) use(j) += 1
+            i += 1
+          }
+        }
+        Iterator.single(use)
+      }
+      .reduce { (a, b) =>
+        var i = 0
+        while (i < SeedN) { a(i) += b(i); i += 1 }
+        a
+      }
+  }
+
   /** One training run: per round, every live piece's usage and whether it
     * survived the prune. Rows: (round, pid, piece, usage, kept). */
   private def trainTrajectory(
-      s: SparkSession, d: String): Seq[(Int, Long, String, Long, Long)] = {
-    val seed = computeSeed(s, d)
-    val docs = Tables.documents(s, d).select(col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      s: SparkSession, d: String): Seq[(Int, Long, String, Long, Long)] =
+    Tables.withTexts(Tables.documents(s, d).select(col("text"))) { texts =>
+      val seed = computeSeed(texts)
       var alive = seed.map(_._1).toSet
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String, Long, Long)]
       var r = 1
       while (r <= Rounds) {
         val live = seed.filter(p => alive(p._1)) // pid (= priority) order
-        val seg = segChain(col("text"), live.map(p => (p._1, p._2)))
-        val aggs = live.map { p =>
-          sum((length(col("s")) -
-            length(call_function("replace", col("s"), lit(puaStr(p._1)), lit(""))))
-            .cast("long")).as(s"u${p._1}")
-        }
-        val row = docs.select(seg.as("s")).agg(aggs.head, aggs.tail: _*).head()
-        val usage = live.zipWithIndex.map { case (p, i) => p._1 -> row.getLong(i) }.toMap
+        val use = roundUsage(texts, live.map(p => (p._1, p._2)))
+        val usage = live.map(p => p._1 -> use((p._1 - 1).toInt)).toMap
         // M-step: drop the Prune least-used (usage ASC, piece DESC — total)
         val dropped = live.sortWith { (x, y) =>
           if (usage(x._1) != usage(y._1)) usage(x._1) < usage(y._1)
@@ -158,8 +197,7 @@ object UlmTrain {
         r += 1
       }
       out.toSeq
-    } finally { docs.unpersist(blocking = false); () }
-  }
+    }
 
   private val trajBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
@@ -178,13 +216,22 @@ object UlmTrain {
     }
   }
 
+  private val vocabMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Long, String)])]()
+
   /** The FINAL vocabulary (survivors of round [[Rounds]]), in priority
-    * order — ≤ SeedN rows, bounded driver state. */
-  private[graft] def learnedVocab(s: SparkSession, d: String): Seq[(Long, String)] =
-    s.read.parquet(trajLocation(s, d))
-      .filter(col("round") === Rounds && col("kept") === 1L)
-      .orderBy(col("pid")).collect()
-      .map(r => (r.getAs[Long]("pid"), r.getAs[String]("piece"))).toSeq
+    * order — ≤ SeedN rows, bounded driver state. Read once per artifact
+    * location and then served from driver memory; a regenerated corpus
+    * moves the location, which re-reads it. */
+  private[graft] def learnedVocab(s: SparkSession, d: String): Seq[(Long, String)] = {
+    val loc = trajLocation(s, d)
+    graft.Artifacts.cachedValue(vocabMemo, d, loc) {
+      s.read.parquet(loc)
+        .filter(col("round") === Rounds && col("kept") === 1L)
+        .orderBy(col("pid")).collect()
+        .map(r => (r.getAs[Long]("pid"), r.getAs[String]("piece"))).toSeq
+    }
+  }
 
   // ------------------------------------------------------------------
   // gated operators

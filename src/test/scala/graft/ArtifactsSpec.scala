@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bucketed, Graph, Tables}
+import graft.operators.{BpeTrain, Bucketed, Graph, Tables, UlmTrain}
 
 /** The stored-artifact staleness contract (round-9 verdict item 1): every
   * per-JVM cache — the F3/F5 ANN indexes, the B57 edge table, the E7/E8
@@ -174,5 +174,36 @@ class ArtifactsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val r2 = Bucketed.bucketedJoin(spark, dir).agg(sum(col("n"))).head.getLong(0)
     assert(r2 < r1, "stale bucketed fact tables served after overwrite")
+  }
+
+  test("learned tokenizer tables and their memoized consumers follow an in-place overwrite") {
+    val dir = Files.createTempDirectory("graft-stale-tok").toString
+    copyFile(s"$sf/documents.parquet", s"$dir/documents.parquet")
+    // the consumers train and memoize all three tables
+    Seq(UlmTrain.fertilityUlm(spark, dir), BpeTrain.learnedTokens(spark, dir),
+      BpeTrain.fertilityPretok(spark, dir)).foreach(df => assert(df.count() > 0))
+    def stored() = Seq(UlmTrain.ulmTrainVocab(spark, dir), BpeTrain.trainMerges(spark, dir),
+      BpeTrain.trainMergesPretok(spark, dir)).map(_.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+    def memoized() = Seq(UlmTrain.learnedVocab(spark, dir), BpeTrain.learnedRules(spark, dir),
+      BpeTrain.learnedRulesPretok(spark, dir))
+    // what each memo must equal: the final survivors of the ULM trajectory,
+    // and each rule table's (sym_a, sym_b, merged) columns in round order
+    def derived(t: Seq[Seq[Seq[Any]]]) = {
+      val vocab = t(0).filter(r => r(0) == UlmTrain.Rounds && r(4) == 1L)
+        .map(r => (r(1).asInstanceOf[Long], r(2).asInstanceOf[String])).sortBy(_._1)
+      def rules(rs: Seq[Seq[Any]]) = {
+        val o = rs.sortBy(_(0).asInstanceOf[Int]).map(_.slice(1, 4).map(_.asInstanceOf[Long].toInt))
+        (o.map(_(0)), o.map(_(1)), o.map(_(2)))
+      }
+      Seq(vocab, rules(t(1)), rules(t(2)))
+    }
+    val before = stored()
+    assert(memoized() == derived(before))
+    Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val after = stored()
+    Seq("ulm_train_vocab", "bpe_train_merges", "bpe_train_merges_pretok").zipWithIndex
+      .foreach { case (k, i) => assert(after(i) != before(i), s"stale $k served after overwrite") }
+    assert(memoized() == derived(after), "a memoized table did not follow its retrained artifact")
   }
 }

@@ -268,4 +268,21 @@ class BpeTrainSpec extends SparkSpec {
         s"corpus round-trip broke for doc $id")
     }
   }
+
+  test("training submits one job per round, and warm rule tables read none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-jobs")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    val d = dir.toString
+    // one per round, plus the parquet schema reads and the write
+    val plain = jobsSubmitted(BpeTrain.trainMerges(spark, d))
+    val pretok = jobsSubmitted(BpeTrain.trainMergesPretok(spark, d))
+    assert(plain <= BpeTrain.Rounds + 4 && pretok <= BpeTrain.Rounds + 4,
+      s"plain: $plain, pretok: $pretok jobs for ${BpeTrain.Rounds} rounds")
+    BpeTrain.learnedRules(spark, d); BpeTrain.learnedRulesPretok(spark, d)
+    val warm = jobsSubmitted {
+      BpeTrain.learnedRules(spark, d); BpeTrain.learnedRulesPretok(spark, d)
+    }
+    assert(warm == 0, s"memoized rule tables re-read the artifact ($warm jobs)")
+  }
 }

@@ -401,8 +401,12 @@ class DedupSpec extends SparkSpec {
     val slug = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
     val tbls = Seq("prefixh", "dfh", "arrh").map(k => s"graft_incr_${k}_$slug")
     tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    // an older build's string-keyed index tables, left in the warehouse
+    val legacy = Seq("prefix", "df", "arr").map(k => s"graft_incr_${k}_$slug")
+    legacy.foreach(t => spark.range(1).write.mode("overwrite").saveAsTable(t))
     val r1 = Dedup.incrementalNew(spark, sf).collect().map(_.getLong(0)).toSet
     assert(tbls.forall(spark.catalog.tableExists), "index tables not materialized")
+    assert(!legacy.exists(spark.catalog.tableExists), "legacy index tables survived the rebuild")
     // the query plan consumes the stored index (plain table scans), not a
     // re-shingled corpus: the only documents scan is the batch side
     val plan = Dedup.incrementalNew(spark, sf).queryExecution.executedPlan.toString

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +27,28 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpecBase.spark
   def sf: String = SparkSpecBase.sf
   def sf01: String = SparkSpecBase.sf01
+
+  /** The number of Spark jobs `body` submits from this thread, counted by
+    * a SparkListener on a private job group. */
+  def jobsSubmitted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-spec-jobs-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          n.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.SpecBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
 }

@@ -105,4 +105,16 @@ class UlmTrainSpec extends SparkSpec {
       assert(r.getLong(6) == 1000 * chars / math.max(toks, 1L))
     }
   }
+
+  test("training submits one job per round, and warm vocabulary reads none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ulm-jobs")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    // one per round, plus the seed, the parquet schema reads and the write
+    val cold = jobsSubmitted(UlmTrain.ulmTrainVocab(spark, dir.toString))
+    assert(cold <= UlmTrain.Rounds + 4, s"$cold jobs for ${UlmTrain.Rounds} rounds")
+    UlmTrain.learnedVocab(spark, dir.toString)
+    val warm = jobsSubmitted(UlmTrain.learnedVocab(spark, dir.toString))
+    assert(warm == 0, s"memoized vocabulary re-read the artifact ($warm jobs)")
+  }
 }
