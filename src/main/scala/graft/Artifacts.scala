@@ -5,9 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Content fingerprinting for the per-JVM stored-artifact caches (the F3/F5
-  * ANN indexes, the B57 edge table, the E7/E8 dedup artifacts, the events
-  * ts-type probe). Keying those caches on the dataset *path* alone serves
+/** Stored artifacts: the one place that builds, keys, names and reclaims
+  * them ([[store]]), over a content fingerprint of their inputs
+  * ([[fingerprint]]). Keying an artifact on the dataset *path* alone serves
   * stale answers when the files at that path are regenerated inside one
   * JVM — a long-lived session would keep routing queries through an index
   * built from the old corpus. The fingerprint is METADATA-ONLY (one
@@ -17,22 +17,71 @@ import org.apache.spark.sql.SparkSession
   */
 object Artifacts {
 
-  /** Base directory for on-the-fly artifact/fixture storage (BPE rule
-    * tables, binary/late-data fixtures, A24 scratch outputs). Defaults to
-    * the driver's java.io.tmpdir — correct on local[*] and on any cluster
-    * whose configured scratch path is shared — and is overridden with
-    * `graft.scratch.dir` for multi-node deployments, where it MUST point
-    * at a filesystem every executor and the driver can reach (HDFS/object
-    * store): artifacts are written by executors and re-read by
-    * driver-planned scans, so a node-local path would scatter them.
-    * (The stored ANN/graph indexes have their own per-site confs —
-    * graft.ivf.dir, graft.int8.dir, graft.pq.dir, graft.ivfpq.dir,
-    * graft.graph.dir — with the same shared-FS contract; bucketed tables
-    * follow spark.sql.warehouse.dir. SURVEY §5 carries the inventory.)
+  /** Conf naming the default artifact base; see [[scratchBase]]. */
+  private val ScratchConf = "graft.scratch.dir"
+
+  /** Base directory for artifacts and scratch outputs with no location
+    * conf of their own: `graft.scratch.dir`, else the driver's
+    * java.io.tmpdir. On a multi-node deployment it MUST name a filesystem
+    * every executor and the driver can reach (HDFS/object store):
+    * artifacts are written by executors and re-read by driver-planned
+    * scans, so a node-local path would scatter them.
     */
   def scratchBase(s: SparkSession): String =
-    s.conf.getOption("graft.scratch.dir")
+    s.conf.getOption(ScratchConf)
       .getOrElse(System.getProperty("java.io.tmpdir"))
+
+  /** Build-once-per-generation stored artifact: returns the location of
+    * the `kind` artifact of dataset `d`, building it into that location
+    * with `build` the first time, and again whenever its inputs change.
+    *
+    *   - *Where.* Under the base named by `dirConf` (the site's own
+    *     location conf, e.g. `graft.ivf.dir` or `spark.sql.warehouse.dir`),
+    *     else [[scratchBase]]; every base follows scratchBase's shared-FS
+    *     contract. The directory is `base/graft_<kind>_<hex>`, where the hex
+    *     hashes `(kind, d, shaping, fingerprint)`: two datasets, two
+    *     shaping settings or two input generations never share a directory.
+    *   - *Key.* One entry per `(kind, d, shaping, base)` — the same
+    *     tuple that names the directory, plus the resolved base, so
+    *     repointing a location conf mid-session rebuilds under the new base.
+    *     `shaping` lists every conf value that changes what `build` writes
+    *     (cell count, sample size, file count, thresholds).
+    *   - *Inputs.* The [[fingerprint]] is taken over `inputs`. A
+    *     DERIVED artifact lists the locations of the upstream artifacts it
+    *     reads among its inputs; a location this store returned enters by
+    *     name, without a listing — it already carries the upstream's kind,
+    *     shaping and fingerprint, so every conf that shaped the upstream
+    *     shapes the derived artifact without being listed again.
+    *   - *Generations.* A moved fingerprint builds a NEW directory and
+    *     leaves the previous one on disk for lazily-held readers, recorded
+    *     for [[sweepStale]].
+    *
+    * Each key has its own slot, so a build may resolve other artifacts
+    * (its upstreams) while it holds its own.
+    */
+  def store(s: SparkSession, kind: String, d: String, inputs: Seq[String],
+      shaping: Seq[Any] = Nil, dirConf: String = ScratchConf)(
+      build: String => Unit): String = {
+    val base = s.conf.getOption(dirConf).getOrElse(scratchBase(s))
+    val id = (kind +: d +: shaping.map(_.toString)).mkString("@")
+    val (upstream, data) = inputs.partition(issued.contains)
+    val fp = (fingerprint(s, data: _*) +: upstream).mkString("|")
+    val key = s"$id@$base"
+    val slot = slots.computeIfAbsent(key, _ => new ConcurrentHashMap[String, Built]())
+    cachedLocation(slot, key, fp) { fpv =>
+      val dir = new Path(base, s"graft_${kind}_" + java.lang.Long.toHexString(
+        graft.plans.MixHash.polyHash(s"$id@$fpv"))).toString
+      build(dir)
+      issued.add(dir)
+      dir
+    }
+  }
+
+  /** [[store]]'s entries, one single-entry slot per key. */
+  private val slots = new ConcurrentHashMap[String, ConcurrentHashMap[String, Built]]()
+
+  /** Every location [[store]] has built in this JVM. */
+  private val issued = ConcurrentHashMap.newKeySet[String]()
 
   /** Metadata fingerprint of one or more dataset paths. Per-file hashes are
     * XOR-combined so the (filesystem-dependent) listing order cannot change
@@ -84,21 +133,21 @@ object Artifacts {
 
   /** A built artifact location plus the input fingerprint it was built
     * from. */
-  final case class Built(fingerprint: String, location: String)
+  private[graft] final case class Built(fingerprint: String, location: String)
 
-  /** Build-once-per-(key, input-fingerprint): returns the cached location
-    * while the inputs are unchanged, re-runs `build` the moment the
-    * fingerprint moves. `compute` holds the map bucket during the build —
-    * same single-build guarantee the old `computeIfAbsent` sites had.
+  /** [[store]]'s primitive, build-once-per-(key, input-fingerprint):
+    * returns the cached location while the inputs are unchanged, re-runs
+    * `build` the moment the fingerprint moves. `compute` holds the map
+    * bucket during the build, so concurrent callers of one key build once.
     *
-    * Builders should version their OUTPUT location by the fingerprint
-    * (callers receive it as `build`'s argument): a rebuild that overwrote
-    * the previous generation's files in place would yank them out from
-    * under any lazily-held DataFrame still referencing the old location —
-    * per-generation dirs keep in-flight readers valid, at the cost of one
-    * small dir per in-JVM regeneration (rare by definition).
+    * `build` receives the fingerprint and must version its OUTPUT location
+    * by it: a rebuild that overwrote the previous generation's files in
+    * place would yank them out from under any lazily-held DataFrame still
+    * referencing the old location — per-generation dirs keep in-flight
+    * readers valid, at the cost of one small dir per in-JVM regeneration
+    * (rare by definition).
     */
-  def cachedLocation(
+  private[graft] def cachedLocation(
       map: ConcurrentHashMap[String, Built], key: String, fp: String)(
       build: String => String): String =
     map.compute(key, (_, old) =>

@@ -341,53 +341,27 @@ object Dedup {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Edge-list parquet locations built this JVM, keyed by data dir — the E8
-    * pair graph is a PERSISTENT ARTIFACT (SURVEY §5): derive the PPJoin
-    * pipeline once per corpus, then every clustering run consumes the stored
-    * edges. Same build-once pattern as the E7 corpus index and the F3/F5
-    * stored ANN indexes.
-    */
-  private val pairsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The E2 verified pair set as a STORED per-corpus artifact (doc_a,
-    * doc_b, jac): materialized exactly once per (corpus, fingerprint) and
-    * scanned by every consumer — E8's clustering AND H17's split-leakage
-    * audit read this instead of re-deriving the PPJoin pipeline. A
-    * persist+count probe costs MORE than a full materialization (AQE is
-    * disabled inside cached subplans) and limit-collect's incremental job
-    * waves recompute the expensive verify stage when the limit never
-    * saturates; from the parquet, the edge count is a metadata-only footer
-    * read at any scale.
+    * doc_b, jac) in the warehouse (SURVEY §5): materialized exactly once
+    * per (corpus, fingerprint) and scanned by every consumer — E8's
+    * clustering AND H17's split-leakage audit read this instead of
+    * re-deriving the PPJoin pipeline. A persist+count probe costs MORE
+    * than a full materialization (AQE is disabled inside cached subplans)
+    * and limit-collect's incremental job waves recompute the expensive
+    * verify stage when the limit never saturates; from the parquet, the
+    * edge count is a metadata-only footer read at any scale.
     */
-  /** Resolve the stored pair artifact to (input fingerprint, location) —
-    * ONE fingerprint walk per call, and consumers that derive FURTHER
-    * artifacts from the pairs (E8's labels) must key them on THIS
-    * fingerprint, not a recomputed one: a corpus regeneration racing
-    * between two fingerprint calls would otherwise bind labels built from
-    * the old pair generation to the new fingerprint, permanently serving
-    * wrong clusters for it.
-    */
-  private def pairsArtifact(s: SparkSession, d: String): (String, String) = {
-    // keyed on (dataset, documents fingerprint): regenerating the corpus in
-    // place rebuilds the pair graph instead of serving stale edges
-    val pairsFp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    val pairsLocStr = graft.Artifacts.cachedLocation(pairsBuilt, d, pairsFp) { fpv =>
+  private def pairsLocation(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "pairs_edges", d, Seq(s"$d/documents.parquet"),
+        dirConf = "spark.sql.warehouse.dir") { loc =>
       val (pairsUnsorted, scoped) = jaccardCore(s, d)
-      // generation-versioned location: a rebuild after an in-place corpus
-      // regeneration must not delete files a lazily-held reader of the OLD
-      // generation still references
-      val loc = warehousePath(s, s"graft_pairs_${dirSlug(d)}_${fpv}_edges")
       pairsUnsorted.select(col("doc_a"), col("doc_b"), col("jac"))
-        .write.mode("overwrite").parquet(loc.toString)
+        .write.mode("overwrite").parquet(loc)
       scoped.foreach(_.unpersist(false))
-      loc.toString
     }
-    (pairsFp, pairsLocStr)
-  }
 
   private[graft] def pairsParquet(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pairsArtifact(s, d)._2)
+    s.read.parquet(pairsLocation(s, d))
 
   def clusterPairs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("doc_id"))
@@ -411,7 +385,7 @@ object Dedup {
     // (a broadcast-ready local label table) is trivially replayable with no
     // checkpoint blocks to manage. Above the threshold (the 100 TB shape)
     // the distributed path below runs.
-    val (ccFp, pairsLoc) = pairsArtifact(s, d)
+    val pairsLoc = pairsLocation(s, d)
     val pairsPq = s.read.parquet(pairsLoc).select(col("doc_a"), col("doc_b"))
     val nEdges = pairsPq.count() // parquet count-star: footers only
     if (nEdges <= ccLocalMaxEdges(s)) {
@@ -431,24 +405,16 @@ object Dedup {
     // state is bounded by the pair-graph size (tiny vs the corpus:
     // near-dup graphs are sparse), not the corpus.
     //
-    // The converged labels parquet follows the SAME per-generation
-    // discipline as the pair parquet (keyed on the fingerprint the PAIRS
-    // were resolved under — see [[pairsArtifact]] — generation-suffixed
-    // dir, build-once per (corpus, fingerprint)): an in-place overwrite
-    // per run would yank files out from under a lazily-held frame a
-    // previous clusterPairs call returned.
-    val labelsLoc = graft.Artifacts.cachedLocation(labelsBuilt, d, ccFp) { fpv =>
-      val loc = warehousePath(s, s"graft_pairs_${dirSlug(d)}_${fpv}_labels").toString
+    // The converged labels parquet is DERIVED from the pair generation
+    // read above and keyed on exactly that location: a corpus regeneration
+    // racing this call moves the pairs to a new location, which keys a new
+    // labels generation — labels built from old pairs are never bound to
+    // the new corpus.
+    s.read.parquet(graft.Artifacts.store(s, "pairs_labels", d, Seq(pairsLoc),
+        dirConf = "spark.sql.warehouse.dir") { loc =>
       propagateMinLabels(s, pairsPq.toDF("src", "dst"), loc)
-      loc
-    }
-    s.read.parquet(labelsLoc)
+    })
   }
-
-  /** Build-once ledger for the distributed-CC labels parquet — same
-    * per-(corpus, fingerprint) discipline as [[pairsBuilt]]. */
-  private val labelsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
 
   /** Round cap for the distributed CC iteration (`graft.dedup.ccMaxRounds`,
     * default 50). The alternating star algorithm converges in O(log n)
@@ -591,9 +557,9 @@ object Dedup {
     * table (rare by construction: at most rows/cap keys) joins back against
     * the band rows with AQE free to broadcast it, and the band rows
     * themselves are never sort-shuffled. Measured ~3x cheaper than the
-    * window form at sf0.1 (PerfLab `simhash`), and the win grows with data:
-    * at 100 TB the window form would sort-shuffle every band row. Sub-cap
-    * rows come back with `bn` null.
+    * window form at sf0.1 (PERF_NOTES "Measurements cited in code"), and
+    * the win grows with data: at 100 TB the window form would sort-shuffle
+    * every band row. Sub-cap rows come back with `bn` null.
     */
   private[graft] def withBucketStats(buckets: DataFrame, keys: Seq[String], rep: Column,
       cap: Long): DataFrame = {

@@ -185,11 +185,7 @@ object BeamParity {
   def sinkTextRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.pipeline.Pipe
-    val dir = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_sink_rt_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
+    val dir = scratchDir(s, d, "sink_rt")
     val lines = Tables.documents(s, d)
       .select(concat_ws("\t", col("doc_id"), col("text")).as("line"))
       .as[String]
@@ -210,11 +206,7 @@ object BeamParity {
     * per call like [[sinkTextRoundtrip]].
     */
   def sourceSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(
-      graft.Artifacts.scratchBase(s),
-      "graft_schema_ev_" + d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
+    val dir = scratchDir(s, d, "schema_ev")
     val docs = Tables.documents(s, d)
     docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id"), col("text"), col("lang"))
@@ -231,8 +223,8 @@ object BeamParity {
         sum(col("n_chars")).as("sum_chars"))
   }
 
-  /** Deterministic per-(data dir, label) scratch dir under java.io.tmpdir,
-    * wiped before use — shared by the source/sink round-trip queries so
+  /** Deterministic per-(data dir, label) scratch dir under the scratch
+    * base, wiped before use — shared by the source/sink round-trip queries so
     * repeated runs never accumulate files.
     */
   private def scratchDir(s: SparkSession, d: String, label: String): org.apache.hadoop.fs.Path = {
@@ -336,23 +328,16 @@ object BeamParity {
     *
     * The directory is the operator's INPUT FIXTURE — a binary object store
     * standing in for the media corpus a user already has — so it is built
-    * ONCE per documents-table fingerprint ([[graft.Artifacts
-    * .cachedLocation]], the B33 zorder discipline) instead of
+    * ONCE per documents-table fingerprint ([[graft.Artifacts.store]], the
+    * B33 zorder discipline) instead of
     * delete-and-rewritten per call: A25/A26 measure binary INGESTION, and
     * regenerating 1-file-per-document scaffolding each run was charging
     * every bench rep ~N metadata round-trips of non-operator work (the
     * round-11 42 s regression on this key).
     */
-  private val binDocsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def writeBinaryDocs(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    graft.Artifacts.cachedLocation(binDocsBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bin_rt_${slug}_$fpv")
-      val dirStr = dir.toString
+  private def writeBinaryDocs(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "bin_rt", d, Seq(s"$d/documents.parquet")) { dirStr =>
+      val dir = new org.apache.hadoop.fs.Path(dirStr)
       val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(dir, true) // a stale partial build at this fp never survives
       fs.mkdirs(dir)
@@ -375,9 +360,7 @@ object BeamParity {
             try out.write(r.getAs[Array[Byte]](1)) finally out.close()
           }
         }
-      dirStr
     }
-  }
 
   /** Spec accessor: the fingerprint-versioned .bin fixture location (the
     * spec must not guess the fp suffix — it did until round 14, passing
@@ -442,21 +425,13 @@ object BeamParity {
   /** The compacted blob TABLE as a reusable source (doc_id, payload) —
     * the G-block flagship (`mm_prepare`) ingests from here, closing the
     * loop from a binary file store through compaction into the image
-    * pipeline. Built once per (corpus, fingerprint) like
-    * [[writeBinaryDocs]]; A26's gate separately proves the rewrite
+    * pipeline. DERIVED from the [[writeBinaryDocs]] store and keyed on
+    * the generation it compacts; A26's gate separately proves the rewrite
     * lossless against the documents oracle. */
-  private val binCompactBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private[graft] def compactedBlobs(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-    val loc = graft.Artifacts.cachedLocation(binCompactBuilt, d, fp) { fpv =>
-      val binDir = writeBinaryDocs(s, d)
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_bin_blobs_${slug}_$fpv").toString
+    val binDir = writeBinaryDocs(s, d)
+    val loc = graft.Artifacts.store(s, "bin_blobs", d, Seq(binDir)) { dir =>
       compactBinaryDir(s, binDir, dir, BinCompactTargetBytes)
-      dir
     }
     s.read.parquet(loc).select(col("doc_id"), col("payload"))
   }
@@ -562,15 +537,8 @@ object BeamParity {
     * events table without touching the file). Built once per corpus
     * fingerprint (the A25 fixture discipline).
     */
-  private val jsonlBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
-  private def jsonlFixture(s: SparkSession, d: String): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/events.parquet")
-    graft.Artifacts.cachedLocation(jsonlBuilt, d, fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_jsonl_${slug}_$fpv").toString
+  private def jsonlFixture(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "jsonl", d, Seq(s"$d/events.parquet")) { dir =>
       import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
       val vu = column(graft.plans.ScaledLong(
         expression(col("value").cast("double")), 10000.0))
@@ -582,9 +550,7 @@ object BeamParity {
           when(pmod(col("event_id"), lit(17L)) === 0, lit("")).otherwise(lit("}")))
           .as("line"))
         .coalesce(1).write.mode("overwrite").text(dir)
-      dir
     }
-  }
 
   def sourceJsonlQuarantine(s: SparkSession, d: String): DataFrame = {
     val parsed = s.read

@@ -27,7 +27,7 @@ import graft.plans.BpeDynamic
   * (a merge pass == a left-to-right non-overlapping `replace`).
   *
   * The learned table is a STORED ARTIFACT (parquet, versioned by corpus
-  * fingerprint via [[graft.Artifacts.cachedLocation]] — the F3/F5 index
+  * fingerprint via [[graft.Artifacts.store]] — the F3/F5 index
   * discipline): training runs once per corpus generation. The consumers
   * (the learned token counts, the learned packing, coverage, id emission)
   * read the stored table once per location and then serve it from driver
@@ -111,17 +111,11 @@ object BpeTrain {
     * location, which retrains and re-reads). */
   private final class LearnedTable(
       tag: String, prep: Column, mergeBase: Int, excludeSym: Option[Int]) {
-    private val built =
-      new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
     private val memo =
       new java.util.concurrent.ConcurrentHashMap[String, (String, Rules)]()
 
-    def location(s: SparkSession, d: String): String = {
-      val fp = graft.Artifacts.fingerprint(s, s"$d/documents.parquet")
-      graft.Artifacts.cachedLocation(built, d, fp) { fpv =>
-        val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-        val dir = new org.apache.hadoop.fs.Path(
-          graft.Artifacts.scratchBase(s), s"graft_bpe_${tag}_${slug}_$fpv").toString
+    def location(s: SparkSession, d: String): String =
+      graft.Artifacts.store(s, s"bpe_$tag", d, Seq(s"$d/documents.parquet")) { dir =>
         val rules = Tables.withTexts(Tables.documents(s, d).select(prep))(
           trainLoop(_, mergeBase, excludeSym))
         val rows = rules.zipWithIndex.map { case ((a, b, m, cnt), i) =>
@@ -130,9 +124,7 @@ object BpeTrain {
         import s.implicits._
         rows.toDF("round", "sym_a", "sym_b", "merged", "n_pairs")
           .coalesce(1).write.mode("overwrite").parquet(dir)
-        dir
       }
-    }
 
     def rules(s: SparkSession, d: String): Rules = {
       val loc = location(s, d)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * ([[graft.plans.SumInt128]]), which is order-independent, overflow-proof
   * to ~1.7e34 in value terms, and stays on whole-stage codegen's primitive
   * fast path — ~2.4× faster than decimal accumulation on the lineitem
-  * aggregate family (PerfLab `dsum`). The DuckDB twins sum the identically
+  * aggregate family (PERF_NOTES "Exact-sum decomposition"). The DuckDB twins sum the identically
   * rounded BIGINT units (DuckDB widens to HUGEINT natively) and convert
   * through the same bit-exact int128→double ([[graft.plans.Int128ToDouble]]
   * replicates DuckDB's CastBigintToFloating), so results hash-match at any
@@ -55,7 +55,8 @@ object Exact {
     s"(CAST(SUM(${graft.plans.ScaledLong.sql(x, "10000.0")}) $over AS DOUBLE) / 10000.0)"
 
   /** Decimal-exact form, kept for weighted/conditional sums whose twins
-    * predate the unit form (PerfLab also uses it as the measured baseline).
+    * predate the unit form (and the measured baseline in PERF_NOTES
+    * "Exact-sum decomposition").
     */
   def decSum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
   def sqlDecSum(x: String): String =

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * java.math.BigDecimal add per row: Spark widens the sum buffer to
   * DECIMAL(28,4), every `Decimal.+` goes through `toBigDecimal`, and the
   * lineitem aggregate family (q1/rollup/cube/grouping-sets) spent more time
-  * accumulating than scanning (PerfLab `dsum` at sf0.1: q1 aggregation
-  * 0.85 s decimal vs 0.36 s double-sum vs 0.20 s scan-only).
+  * accumulating than scanning (PERF_NOTES "Exact-sum decomposition", sf0.1:
+  * q1 aggregation 0.85 s decimal vs 0.36 s double-sum vs 0.20 s scan-only).
   *
   * This pair replaces it with scaled-integer accumulation that never leaves
   * whole-stage codegen's primitive fast path:

@@ -275,31 +275,14 @@ object Ann {
     * `(cell_id, cv, cn)`. This is how IVF deploys at scale: the index is an
     * OFFLINE artifact the ingest pipeline builds; queries only route and
     * probe. The per-JVM build here stands in for that offline step (same
-    * pattern as [[int8Index]]). Location: `graft.ivf.dir` conf, else tmpdir.
+    * pattern as [[int8Index]]). Location: `graft.ivf.dir` conf, else the
+    * scratch base ([[graft.Artifacts.store]]).
     */
-  private val ivfBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def ivfIndexDir(s: SparkSession, d: String): String = {
-    // per-dataset component on BOTH the conf path and the tmpdir fallback
-    // (a fixed suffix under a shared conf dir would cross-clobber datasets);
-    // cache key includes the resolved base dir AND the input fingerprint, so
-    // regenerating embeddings.parquet in place — or repointing graft.ivf.dir
-    // mid-session — rebuilds instead of serving the stale index
-    val base = s.conf.getOption("graft.ivf.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivf")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val maxTrainKey = s.conf.getOption("graft.ann.trainSampleRows").getOrElse("")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfBuilt, s"$d@$base@$maxTrainKey@k$kCells", fp) { fpv =>
-      import s.implicits._
-      // the on-disk slug carries everything the cache key carries (dataset,
-      // training-sample conf, AND input fingerprint): distinct entries
-      // writing to one directory would serve each other's index files, and
-      // a rebuild overwriting the previous generation in place would break
-      // lazily-held readers of it
-      val dir = base + "/index-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$maxTrainKey@k$kCells@$fpv"))
+    val maxTrain = s.conf.getOption("graft.ann.trainSampleRows")
+      .map(_.toLong).getOrElse(1000000L)
+    graft.Artifacts.store(s, "ivf", d, Seq(s"$d/embeddings.parquet"),
+        Seq(maxTrain, ivfCellsConf(s)), "graft.ivf.dir") { dir =>
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
       // SAMPLED TRAINING (SURVEY §5's 100 TB path, now code): above
@@ -310,8 +293,6 @@ object Ann {
       // growth (the H6 discipline). ASSIGNMENT stays full-corpus below, so
       // the stored index still covers every vector.
       val n = Tables.embeddings(s, d).count() // parquet count-star: footers only
-      val maxTrain = s.conf.getOption("graft.ann.trainSampleRows")
-        .map(_.toLong).getOrElse(1000000L)
       val sampled = n > maxTrain
       val trainSrc = if (!sampled) full else {
         val den = 1L << 20
@@ -331,7 +312,6 @@ object Ann {
           .write.mode("overwrite").parquet(s"$dir/corpus")
         writeCentroids(s, cents, s"$dir/centroids")
       } finally e.unpersist(blocking = true)
-      dir
     }
   }
 
@@ -409,22 +389,14 @@ object Ann {
     pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
       lit(IvfIncrMod.toLong)) === lit(IvfIncrRes.toLong)
 
-  private val ivfIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The incremental index: `gen-0/corpus` (base assignment, trained on
     * base arrivals only), `centroids` (STORED — never touched by an
     * append), `gen-1/corpus` (the arrival batch assigned under the stored
     * centroids). Same per-(corpus, fingerprint) build-once discipline as
     * [[ivfIndexDir]]. */
-  private def ivfIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivf.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivf") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfIncrBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/index-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
+  private def ivfIncrDir(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "ivf_incr", d, Seq(s"$d/embeddings.parquet"),
+        Seq(ivfCellsConf(s)), "graft.ivf.dir") { dir =>
       val full = withNorm(Tables.embeddings(s, d))
         .select(col("vec_id"), col("v"), col("nrm"))
       val baseSet = graft.CacheScope.scopedPersist(full.filter(!ivfDeltaPred))
@@ -438,9 +410,7 @@ object Ann {
       // — the base assignment is never read, so batch cost is O(|batch|)
       ivfAppendAssign(s, d, s"$dir/centroids")
         .write.mode("overwrite").parquet(s"$dir/gen-1/corpus")
-      dir
     }
-  }
 
   /** The append step's PLAN: assign ONLY the arrival batch under the
     * stored centroids (inlined as routing literals — the F24 device).
@@ -498,21 +468,14 @@ object Ann {
     * squared error exceeds the base's by this factor (permille). */
   val PqDriftRetrainPermille = 1200L
 
-  private val pqIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The incremental PQ artifact: `codebook` (trained on base arrivals —
     * never touched by an append), `gen-0/codes` (base encoding),
     * `gen-1/codes` (the arrival batch encoded under the stored
     * codebook). Same arrival split as F26 ([[ivfDeltaPred]]) so the two
     * incremental paths describe ONE ingest story. */
-  private def pqIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.pq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-pq") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(pqIncrBuilt, s"$d@$base", fp) { fpv =>
-      val dir = base + "/pq-incr-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
+  private def pqIncrDir(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "pq_incr", d, Seq(s"$d/embeddings.parquet"),
+        dirConf = "graft.pq.dir") { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -529,9 +492,7 @@ object Ann {
       // codebook — gen-0 is never read, so batch cost is O(|batch|)
       pqAppendEncode(s, d, s"$dir/codebook")
         .write.mode("overwrite").parquet(s"$dir/gen-1/codes")
-      dir
     }
-  }
 
   /** The append step's PLAN: encode ONLY the arrival batch under the
     * stored codebook (512 rows, collected and inlined). Exposed to the
@@ -669,10 +630,8 @@ object Ann {
     * accepts it natively). At 100 TB this table IS the serving artifact —
     * built by the ingest pipeline, scanned by queries; the per-JVM build
     * here stands in for that offline step. Location: `graft.int8.dir`
-    * conf, else tmpdir.
+    * conf, else the scratch base.
     */
-  private val int8Built =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
 
   // build-time-only UDF (one pass per dataset, not in the query hot path):
   // array<tinyint> → packed binary
@@ -699,24 +658,12 @@ object Ann {
       .withColumn("qn2", graft.plans.DotProductInt8.dot(col("q"), col("q")))
   }
 
-  private def int8Index(s: SparkSession, d: String): DataFrame = {
-    // per-dataset component on BOTH the conf path and the tmpdir fallback
-    // (a fixed suffix under a shared conf dir would cross-clobber datasets);
-    // keyed on (dataset, resolved base dir, input fingerprint) — see
-    // [[graft.Artifacts]] for the staleness rationale
-    val base = s.conf.getOption("graft.int8.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-int8")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val path = graft.Artifacts.cachedLocation(int8Built, s"$d@$base", fp) { fpv =>
-      val slug = java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
-      val dir = base + s"/embeddings_int8-$slug"
+  private def int8Index(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(graft.Artifacts.store(s, "embeddings_int8", d,
+        Seq(s"$d/embeddings.parquet"), dirConf = "graft.int8.dir") { dir =>
       quantizedCodes(Tables.embeddings(s, d), Nil)
         .write.mode("overwrite").parquet(dir)
-      dir
-    }
-    s.read.parquet(path)
-  }
+    })
 
   /** F5 — top-k retrieval over int8-QUANTIZED vectors (F4's format actually
     * queried): per-vector symmetric quantization q_i = round(127·x_i/max|x|),
@@ -940,22 +887,13 @@ object Ann {
     * stripe's DIRECTORIES at planning time (no data touched outside the
     * stripe), and within the stripe the scan moves 8× fewer vector bytes
     * than the float arrays. Same offline-build stand-in as [[int8Index]];
-    * location `graft.int8.dir` conf, else tmpdir.
+    * location `graft.int8.dir` conf, else the scratch base.
     */
-  private val int8LblBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   private def int8LabelIndex(s: SparkSession, d: String): DataFrame = {
-    val base = s.conf.getOption("graft.int8.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-int8")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val path = graft.Artifacts.cachedLocation(int8LblBuilt, s"$d@$base@lbl", fp) { fpv =>
-      val slug = java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@lbl@$fpv"))
-      val dir = base + s"/embeddings_int8_lbl-$slug"
+    val path = graft.Artifacts.store(s, "embeddings_int8_lbl", d,
+        Seq(s"$d/embeddings.parquet"), dirConf = "graft.int8.dir") { dir =>
       quantizedCodes(Tables.embeddings(s, d), Seq("label"))
         .write.mode("overwrite").partitionBy("label").parquet(dir)
-      dir
     }
     // partition-column read-back: label comes back via partition inference;
     // pin the int type so the gate schema matches the unpartitioned source
@@ -1052,24 +990,16 @@ object Ann {
         col("m.sv").as("sv"), col("m.cell").as("cell"))
   }
 
-  private val pqBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored PQ index: `codes` (vec_id, codes ARRAY<INT>, n2i) + `codebook`
     * (sub, cell, cv, ci2) parquet, built once per (dataset, fingerprint) —
     * the same offline-artifact stand-in as [[int8Index]]/[[ivfIndexDir]].
     * `n2i` is the fixed-point reconstruction norm Σ_sub ‖codeword‖²·2^20 —
     * integer, so the build's per-vector sum is accumulation-order-proof.
-    * Location: `graft.pq.dir` conf, else tmpdir.
+    * Location: `graft.pq.dir` conf, else the scratch base.
     */
-  private def pqIndexDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.pq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-pq")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    graft.Artifacts.cachedLocation(pqBuilt, s"$d@$base", fp) { fpv =>
-      import s.implicits._
-      val dir = base + "/pq-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@$fpv"))
+  private def pqIndexDir(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "pq", d, Seq(s"$d/embeddings.parquet"),
+        dirConf = "graft.pq.dir") { dir =>
       val ev = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1082,10 +1012,8 @@ object Ann {
         pqCodesFrame(sv, cents, ci2)
           .write.mode("overwrite").parquet(s"$dir/codes")
         writePqCodebook(s, cents, ci2, s"$dir/codebook")
-        dir
       } finally sv.unpersist(blocking = true)
     }
-  }
 
   /** Deterministic per-subspace Lloyd over a PERSISTED subvector frame —
     * factored out of [[pqIndexDir]] so the incremental PQ artifact (F27)
@@ -1345,28 +1273,20 @@ object Ann {
     */
   val IvfPqNprobe = 2
 
-  private val ivfpqBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** Stored per-cell PQ postings: (vec_id, codes, n2i) partitioned by the
-    * IVF cell — built once per corpus fingerprint from the two existing
-    * artifacts (cheap join, no retraining). */
-  private def ivfpqIndexDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq")
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfpqBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ivfpq-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
-      val cells = s.read.parquet(s"${ivfIndexDir(s, d)}/corpus")
+    * IVF cell — DERIVED from the IVF index at `ivfDir` and the PQ index at
+    * `pqDir` (cheap join, no retraining), and keyed on those two
+    * generations, so whatever shaped either one rebuilds the postings. */
+  private def ivfpqIndexDir(s: SparkSession, d: String, ivfDir: String,
+      pqDir: String): String =
+    graft.Artifacts.store(s, "ivfpq", d, Seq(ivfDir, pqDir),
+        dirConf = "graft.ivfpq.dir") { dir =>
+      val cells = s.read.parquet(s"$ivfDir/corpus")
         .select(col("vec_id"), col("cell"))
-      s.read.parquet(s"${pqIndexDir(s, d)}/codes")
+      s.read.parquet(s"$pqDir/codes")
         .join(cells, "vec_id")
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      dir
     }
-  }
 
   def ivfpqTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1390,7 +1310,7 @@ object Ann {
     // postings scan: the isin filter prunes non-probed cell partitions at
     // plan time (directory pruning on the partitionBy layout); the admit
     // predicate scopes each query to ITS cells within the probed union
-    val postings = s.read.parquet(ivfpqIndexDir(s, d))
+    val postings = s.read.parquet(ivfpqIndexDir(s, d, ivfDir, pqDir))
       .filter(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), col("codes"), col("n2i"), col("cell").cast("int"))
       .as[(Long, Array[Int], Long, Int)]
@@ -1422,35 +1342,30 @@ object Ann {
   // maintenance — the F26/F27 reports only prove the artifacts' shape.
   // ------------------------------------------------------------------
 
-  private val ivfpqIncrBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The generation store: `gen-0/postings` = base PQ codes joined to the
     * base IVF assignment (both trained on base arrivals only, F26/F27's
     * artifacts), `gen-1/postings` = the arrival batch's appended codes
     * joined to its appended assignment — each `partitionBy(cell)` so a
     * query batch still prunes to its routed cells' directories within
-    * EVERY generation. */
+    * EVERY generation. DERIVED: keyed on the F26/F27 generations it
+    * reads plus the embeddings the append scans. */
   private def ivfpqIncrDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-incr"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ivfpqIncrBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ivfpq-incr-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
-      val cells0 = s.read.parquet(s"${ivfIncrDir(s, d)}/gen-0/corpus")
+    val ivfDir = ivfIncrDir(s, d)
+    val pqDir = pqIncrDir(s, d)
+    graft.Artifacts.store(s, "ivfpq_incr", d,
+        Seq(s"$d/embeddings.parquet", ivfDir, pqDir),
+        dirConf = "graft.ivfpq.dir") { dir =>
+      val cells0 = s.read.parquet(s"$ivfDir/gen-0/corpus")
         .select(col("vec_id"), col("cell"))
-      s.read.parquet(s"${pqIncrDir(s, d)}/gen-0/codes")
+      s.read.parquet(s"$pqDir/gen-0/codes")
         .join(cells0, "vec_id")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/gen-0/postings")
       // the APPEND: compose the two O(|batch|) append plans — the batch
       // routed under the stored centroids and encoded under the stored
       // codebook; neither base artifact is read
-      ivfpqAppendPostings(s, d).write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/gen-1/postings")
-      dir
+      ivfpqAppendPostings(s, d, ivfDir, pqDir).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/gen-1/postings")
     }
   }
 
@@ -1458,13 +1373,14 @@ object Ann {
     * stored routing literals (F26's device) joined to its codes under
     * the collected codebook (F27's device) — two batch-filtered
     * embeddings scans, zero index reads. Exposed to the spec. */
-  private def ivfpqAppendPostings(s: SparkSession, d: String): DataFrame =
-    pqAppendEncode(s, d, s"${pqIncrDir(s, d)}/codebook")
-      .join(ivfAppendAssign(s, d, s"${ivfIncrDir(s, d)}/centroids")
+  private def ivfpqAppendPostings(s: SparkSession, d: String, ivfDir: String,
+      pqDir: String): DataFrame =
+    pqAppendEncode(s, d, s"$pqDir/codebook")
+      .join(ivfAppendAssign(s, d, s"$ivfDir/centroids")
         .select(col("vec_id"), col("cell")), "vec_id")
 
   private[graft] def ivfpqAppendPostingsForSpec(s: SparkSession, d: String): DataFrame =
-    ivfpqAppendPostings(s, d)
+    ivfpqAppendPostings(s, d, ivfIncrDir(s, d), pqIncrDir(s, d))
 
   /** F28's gated frame: F15's cascade (routing → per-cell ADC shortlist
     * through the bounded-heap device → exact rerank, shared definitions)
@@ -1560,23 +1476,15 @@ object Ann {
     pmod(graft.plans.MixHash.splitmix64Col(col("vec_id")),
       lit(DeleteMod.toLong)) === lit(DeleteRes.toLong)
 
-  private val lifecycleBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The lifecycle artifact over the (immutable) F28 generation store:
     * `tombstones` (the persisted delete log), `cells/cell=K` (merged LIVE
     * postings for the cells compaction selected), `_MANIFEST` (every cell
-    * → `new` or `ref`). Built once per corpus fingerprint. */
+    * → `new` or `ref`). DERIVED: keyed on the generation store it reads,
+    * the embeddings the delete log scans, and the compaction threshold. */
   private def lifecycleDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-lc"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    val thr = compactPermilleConf(s)
-    graft.Artifacts.cachedLocation(lifecycleBuilt, s"$d@$base@k$kCells@t$thr", fp) { fpv =>
-      val dir = base + "/lc-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@t$thr@$fpv"))
-      val store = ivfpqIncrDir(s, d)
+    val store = ivfpqIncrDir(s, d)
+    graft.Artifacts.store(s, "ivfpq_lc", d, Seq(s"$d/embeddings.parquet", store),
+        Seq(compactPermilleConf(s)), "graft.ivfpq.dir") { dir =>
       // the delete log: O(|deletes|), never a base rewrite
       Tables.embeddings(s, d).select(col("vec_id")).filter(deletePred)
         .write.mode("overwrite").parquet(s"$dir/tombstones")
@@ -1602,7 +1510,6 @@ object Ann {
           out.write(s"$c\t$kind\n".getBytes("UTF-8"))
         }
       } finally out.close()
-      dir
     }
   }
 
@@ -1714,26 +1621,18 @@ object Ann {
       }
     }
 
-  private val ingestBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
-
   /** The streamed generation store: runs the AvailableNow ingest once per
-    * (JVM, corpus fingerprint, k) over the fixture feed. */
-  private def ingestDir(s: SparkSession, d: String): String = {
-    val base = s.conf.getOption("graft.ivfpq.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivfpq") + "-stream"
-    val fp = graft.Artifacts.fingerprint(s, s"$d/embeddings.parquet")
-    val kCells = ivfCellsConf(s)
-    graft.Artifacts.cachedLocation(ingestBuilt, s"$d@$base@k$kCells", fp) { fpv =>
-      val dir = base + "/ingest-" + java.lang.Long.toHexString(
-        graft.plans.MixHash.polyHash(s"$d@k$kCells@$fpv"))
+    * generation of what it reads — the fixture feed and the stored
+    * F26/F27 centroids and codebook. */
+  private def ingestDir(s: SparkSession, d: String): String =
+    graft.Artifacts.store(s, "ivfpq_stream", d,
+        Seq(ingestFixtureDir(s, d), ivfIncrDir(s, d), pqIncrDir(s, d)),
+        dirConf = "graft.ivfpq.dir") { dir =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(p, true); fs.mkdirs(p)
       runIngestStream(s, d, dir)
-      dir
     }
-  }
 
   /** One ingest run: stream the fixture feed, one file per micro-batch,
     * each batch encoded + routed under the stored artifacts and written

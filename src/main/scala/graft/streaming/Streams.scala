@@ -477,17 +477,14 @@ object Streams {
     * fixed for a streaming query's lifetime at first start and each state
     * partition pays per-micro-batch store open/commit I/O, so it should be
     * sized to sustained throughput and key cardinality — NOT inherited from
-    * a compute-width conf tuned for batch scans (PerfLab `streamjoin`:
-    * the sf0.1 stream-stream join is 7.0 s at 32 state partitions, 2.0 s at
-    * 8 — pure store overhead, identical results). A production deployment
-    * raises the conf for high-cardinality keyed state.
+    * a compute-width conf tuned for batch scans (PERF_NOTES "Measurements
+    * cited in code": the sf0.1 stream-stream join is 7.0 s at 32 state
+    * partitions, 2.0 s at 8 — pure store overhead, identical results). A
+    * production deployment raises the conf for high-cardinality keyed state.
     */
   private def stateParts(s: SparkSession): (String, String) =
     "spark.sql.shuffle.partitions" ->
       s.conf.getOption("graft.streaming.statePartitions").getOrElse("8")
-
-  private val fixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.Artifacts.Built]()
 
   /** A stream fixture: a dir under the scratch base, built once per
     * (`prefix`, `d`, fingerprint of `$d/$table`), holding each `(name, df)`
@@ -497,12 +494,9 @@ object Streams {
     * `files` order. `files` is evaluated only on a build.
     */
   private[graft] def fixtureDir(s: SparkSession, d: String, table: String, prefix: String)(
-      files: => Seq[(String, DataFrame)]): String = {
-    val fp = graft.Artifacts.fingerprint(s, s"$d/$table")
-    graft.Artifacts.cachedLocation(fixtureBuilt, s"$prefix@$d", fp) { fpv =>
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      val dir = new org.apache.hadoop.fs.Path(
-        graft.Artifacts.scratchBase(s), s"graft_${prefix}_fix_${slug}_$fpv")
+      files: => Seq[(String, DataFrame)]): String =
+    graft.Artifacts.store(s, s"${prefix}_fix", d, Seq(s"$d/$table")) { loc =>
+      val dir = new org.apache.hadoop.fs.Path(loc)
       val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(dir, true); fs.mkdirs(dir)
       val staged = files
@@ -518,9 +512,7 @@ object Streams {
         fs.delete(staging, true)
         fs.setTimes(target, t0 - (staged.length - i) * 60000L, -1)
       }
-      dir.toString
     }
-  }
 
   /** Bounded-file streaming source over `$d/events.parquet` with `ts`
     * normalized to TimestampType — the streaming twin of

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{BpeTrain, Bucketed, Graph, Tables, UlmTrain}
+import graft.operators.{Analytics, BpeTrain, Bucketed, Graph, Tables, UlmTrain}
 
 /** The stored-artifact staleness contract (round-9 verdict item 1): every
   * per-JVM cache — the F3/F5 ANN indexes, the B57 edge table, the E7/E8
@@ -105,6 +105,43 @@ class ArtifactsSpec extends SparkSpec {
     assert(Files.exists(Paths.get(locA2)),
       "sweep deleted the LIVE generation after an A→B→A fingerprint cycle")
     assert(!Files.exists(Paths.get(locB)), "superseded generation survived the sweep")
+  }
+
+  test("an artifact follows a shaping conf back after the conf is restored") {
+    // (conf, flipped value, input tables, answer): answer on a copy of the
+    // inputs with the conf flipped, restore the conf and answer again — the
+    // second answer must equal the answer on a fresh copy. A stored
+    // artifact that leaves the conf out of its identity (directly or through
+    // an upstream artifact it reads) serves the flipped generation instead.
+    def key(k: String)(dir: String): Seq[String] =
+      SparkEntry.queries(k)(spark, dir).collect().map(_.toString).sorted.toSeq
+    // the z-order scan's rows are a pure re-ordering of orders, the same
+    // under any file count, so its answer includes the layout's file count
+    def zorderScan(dir: String): Seq[String] = key("layout_zorder_scan")(dir) :+
+      s"files=${spark.read.parquet(Analytics.zorderLayoutDir(spark, dir)).inputFiles.length}"
+    val n = Tables.embeddings(spark, sf).count()
+    val cases = Seq[(String, String, Seq[String], String => Seq[String])](
+      ("graft.ann.trainSampleRows", (n / 10).toString, Seq("embeddings"), key("ann_ivfpq_topk")),
+      ("graft.ivf.cells", "8", Seq("embeddings"), key("ann_ivf_topk")),
+      ("graft.zorder.files", "4", Seq("orders"), zorderScan),
+      ("graft.basket.maxItems", "2", Seq("lineitem"), key("graph_pagerank")),
+      ("graft.ann.compactPermille", "50", Seq("embeddings"), key("ann_ivfpq_compact")))
+    cases.foreach { case (conf, flipped, tables, answer) =>
+      def copy(): String = {
+        val dir = Files.createTempDirectory("graft-shaping").toString
+        tables.foreach(t => copyFile(s"$sf/$t.parquet", s"$dir/$t.parquet"))
+        dir
+      }
+      val dir = copy()
+      assert(spark.conf.getOption(conf).isEmpty, s"$conf is already set")
+      spark.conf.set(conf, flipped)
+      val shaped = try answer(dir) finally spark.conf.unset(conf)
+      val fresh = answer(copy())
+      val moved = shaped != fresh
+      assert(moved, s"$conf=$flipped does not change the answer, so this case shows nothing")
+      val followed = answer(dir) == fresh
+      assert(followed, s"an artifact shaped by $conf=$flipped was served after the conf was restored")
+    }
   }
 
   test("persisted _fingerprint validates tables across a (simulated) fresh JVM") {
